@@ -178,34 +178,6 @@ object ScaleProbe {
       .shuffle(a.toList).mkString
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
-
-  /** Write `df` as ONE parquet FILE at `dest` (fixture layout). */
-  private def writeSingleFile(df: DataFrame, dest: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-probe-part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = {
-      val ls = java.nio.file.Files.list(tmp)
-      try ls.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-      finally ls.close()
-    }
-    // a prior-generation probe run left $dest as a parquet DIRECTORY —
-    // move(REPLACE_EXISTING) cannot replace a non-empty dir, so clear it
-    deleteRecursively(dest)
-    java.nio.file.Files.move(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(tmp)
-  }
-
   /** Synthesize `copies`× the sf0.1 tables into `dst` (see class doc for
     * the key-shift / text-permutation rules). Generation-marked: a stale
     * marker from an older synthesis recipe forces regeneration.
@@ -232,7 +204,9 @@ object ScaleProbe {
               translate(col("text"), permuted(0), permuted(i)))
           else shifted
         }.reduce(_ unionAll _)
-      writeSingleFile(out, java.nio.file.Paths.get(dst, s"$t.parquet"))
+      // one parquet FILE per table (fixture layout); it replaces the
+      // parquet DIRECTORY a prior-generation probe run left there
+      graft.streaming.BoundedStream.writeOneFile(out, java.nio.file.Paths.get(dst, s"$t.parquet"))
       System.err.println(s"[probe] synthesized $t x$copies -> $dst")
     }
     java.nio.file.Files.createFile(done)
@@ -276,132 +250,112 @@ object ScaleProbe {
     * sf0.1 and sf1, flat maintain AND serve ratios next to a ~10×
     * recompute-input ratio are the IVM + MV-serving claims, measured.
     */
-  private def ivmRun(spark: SparkSession, dir: String, label: String): (Long, Double, Double, Double) = {
-    import graft.sources.v2.MemCatalog
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftivm",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.sources.Tables.orders(ss, dir).createOrReplaceTempView("graft_ivm_orders")
-    ss.sql(s"DROP TABLE IF EXISTS graftivm.t.base_$label")
-    ss.sql(s"DROP TABLE IF EXISTS graftivm.t.mv_$label")
-    // base rows ∝ dir rows (keys NOT folded — this probe is about base
-    // size); MoR so the fixed change set writes O(change) deltas.
-    // CONSTANT FILE SIZE, GROWING FILE COUNT — the production invariant
-    // (a 10× table has 10× 128 MB files, not one 10×-bigger file):
-    // clusterBy k + a row-proportional clusterParts give ~10k-row
-    // k-range-partitioned files at every scale, so the fixed change
-    // set's zone-map-pruned scan and its net-diff replay touch the SAME
-    // number of bytes regardless of base size. Without this the base is
-    // ONE file and the net diff re-reads all of it — measuring the
-    // fixture's file layout, not the maintenance algorithm.
-    val srcRows = graft.sources.Tables.orders(ss, dir).count()
-    val parts = math.max(4L, srcRows / 10000L)
-    ss.sql(
-      s"""CREATE TABLE graftivm.t.base_$label
-         |(k BIGINT, cat BIGINT, cents BIGINT)
-         |TBLPROPERTIES ('graft.dml'='mor', 'clusterBy'='k',
-         |               'clusterParts'='$parts')""".stripMargin)
-    ss.sql(
-      s"""INSERT INTO graftivm.t.base_$label
-         |SELECT o_orderkey AS k, CAST(o_orderkey % 97 AS BIGINT) AS cat,
-         |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-         |FROM graft_ivm_orders""".stripMargin)
-    val baseRows = ss.sql(s"SELECT count(*) FROM graftivm.t.base_$label").head().getLong(0)
-    // the contrast: a full recompute of the aggregate is ∝ base size
-    val tr0 = System.nanoTime()
-    ss.sql(s"SELECT cat, count(*) AS n, sum(cents) AS sc FROM graftivm.t.base_$label GROUP BY cat").count()
-    val recompute = (System.nanoTime() - tr0) / 1e9
-    // seed the MV (one recompute, not timed) and pin the version AFTER it
-    ss.sql(s"CREATE TABLE graftivm.t.mv_$label (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    ss.sql(s"INSERT INTO graftivm.t.mv_$label " +
-      s"SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat")
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftivm", s"t__base_$label")
-    val vSeed = MemCatalog.currentVersion(baseDir)
-    // FIXED change set, identical at every scale: 200 appended rows with
-    // keys above any copy's stride, plus an update of the ≤100 smallest
-    // keys (copy 0's head — the same physical rows at sf0.1 and sf1)
-    ss.sql(s"INSERT INTO graftivm.t.base_$label " +
-      "SELECT id, CAST(id % 97 AS BIGINT), id FROM range(20000000000, 20000000200)")
-    val k100 = ss.sql(
-      s"SELECT max(k) FROM (SELECT k FROM graftivm.t.base_$label ORDER BY k LIMIT 100)")
-      .head().getLong(0)
-    ss.sql(s"UPDATE graftivm.t.base_$label SET cents = cents + 1 WHERE k <= $k100")
-    // timed: the incremental maintenance alone — net CDF from vSeed+1,
-    // signed-delta MERGE per micro-batch (Gupta–Mumick)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ivmprobe-$label")
-    val t0 = System.nanoTime()
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .option("startingVersion", vSeed + 1)
-      .table(s"graftivm.t.base_$label")
-      .select(col("cat"), col("cents"), col("_change_type"))
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val view = s"graft_ivm_batch_$label"
-        batch.createOrReplaceTempView(view)
-        batch.sparkSession.sql(
-          s"""MERGE INTO graftivm.t.mv_$label m USING (
-             |  SELECT cat,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN cents ELSE -cents END) AS d_cents
-             |  FROM $view GROUP BY cat) d
-             |ON m.cat = d.cat
-             |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET
-             |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-             |WHEN NOT MATCHED THEN
-             |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val maintain = (System.nanoTime() - t0) / 1e9
-    // correctness rider: incremental == recompute, else the timing is void
-    val bad = ss.sql(
-      s"""SELECT count(*) FROM (
-         |  (SELECT cat, n_rows, sum_cents FROM graftivm.t.mv_$label
-         |   EXCEPT
-         |   SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat)
-         |  UNION ALL
-         |  (SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat
-         |   EXCEPT
-         |   SELECT cat, n_rows, sum_cents FROM graftivm.t.mv_$label))""".stripMargin)
-      .head().getLong(0)
-    require(bad == 0, s"IVM probe: maintained MV diverged from recompute at $label")
-    deleteRecursively(ckpt)
-    // SERVING flat-line — the read half ([[graft.plans.MvRewrite]]): the
-    // watermark-armed rewrite answers the SAME aggregate from the
-    // maintained MV. Timed against `recompute` (the direct base
-    // aggregate above): served latency must stay flat as the base grows
-    // 10×, because the rewritten plan's input is the MV's 97 rows.
-    val s2 = ss.newSession()
-    s2.conf.set("spark.sql.catalog.graftivm",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.plans.MvRewrite.install(s2)
-    val mvDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftivm", s"t__mv_$label")
-    s2.sql(s"ALTER TABLE graftivm.t.mv_$label SET TBLPROPERTIES(" +
-      s"'graft.mv.basedOn' = '${MemCatalog.currentVersion(baseDir)}')")
-    val d = graft.plans.MvRewrite.registerMaintained(s2,
-      s"graftivm.t.base_$label", s"graftivm.t.mv_$label", baseDir, mvDir,
-      Seq("cat"), Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    val serve = try {
-      val aggSql = s"SELECT cat, count(*) AS n, sum(cents) AS sc " +
-        s"FROM graftivm.t.base_$label GROUP BY cat"
-      val armed = s2.sql(aggSql).queryExecution.optimizedPlan.collect {
-        case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-          s.relation.table.name()
-      }.toSet == Set(d.mvName)
-      require(armed, s"IVM probe: the serving rewrite did not arm at $label")
-      val ts0 = System.nanoTime()
-      s2.sql(aggSql).count()
-      (System.nanoTime() - ts0) / 1e9
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
-    (baseRows, maintain, recompute, serve)
-  }
+  private def ivmRun(spark: SparkSession, dir: String, label: String): (Long, Double, Double, Double) =
+    graft.streaming.BoundedStream.run(spark, "ivm",
+        extraConf = Map("spark.sql.catalog.graftivm" -> classOf[graft.sources.v2.MemCatalog].getName)) { s =>
+      import graft.sources.v2.MemCatalog
+      val ss = s.session
+      graft.sources.Tables.orders(ss, dir).createOrReplaceTempView("graft_ivm_orders")
+      ss.sql(s"DROP TABLE IF EXISTS graftivm.t.base_$label")
+      ss.sql(s"DROP TABLE IF EXISTS graftivm.t.mv_$label")
+      // base rows ∝ dir rows (keys NOT folded — this probe is about base
+      // size); MoR so the fixed change set writes O(change) deltas.
+      // CONSTANT FILE SIZE, GROWING FILE COUNT — the production invariant
+      // (a 10× table has 10× 128 MB files, not one 10×-bigger file):
+      // clusterBy k + a row-proportional clusterParts give ~10k-row
+      // k-range-partitioned files at every scale, so the fixed change
+      // set's zone-map-pruned scan and its net-diff replay touch the SAME
+      // number of bytes regardless of base size. Without this the base is
+      // ONE file and the net diff re-reads all of it — measuring the
+      // fixture's file layout, not the maintenance algorithm.
+      val srcRows = graft.sources.Tables.orders(ss, dir).count()
+      val parts = math.max(4L, srcRows / 10000L)
+      ss.sql(
+        s"""CREATE TABLE graftivm.t.base_$label
+           |(k BIGINT, cat BIGINT, cents BIGINT)
+           |TBLPROPERTIES ('graft.dml'='mor', 'clusterBy'='k',
+           |               'clusterParts'='$parts')""".stripMargin)
+      ss.sql(
+        s"""INSERT INTO graftivm.t.base_$label
+           |SELECT o_orderkey AS k, CAST(o_orderkey % 97 AS BIGINT) AS cat,
+           |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           |FROM graft_ivm_orders""".stripMargin)
+      val baseRows = ss.sql(s"SELECT count(*) FROM graftivm.t.base_$label").head().getLong(0)
+      // the contrast: a full recompute of the aggregate is ∝ base size
+      val tr0 = System.nanoTime()
+      ss.sql(s"SELECT cat, count(*) AS n, sum(cents) AS sc FROM graftivm.t.base_$label GROUP BY cat").count()
+      val recompute = (System.nanoTime() - tr0) / 1e9
+      // seed the MV (one recompute, not timed) and pin the version AFTER it
+      ss.sql(s"CREATE TABLE graftivm.t.mv_$label (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
+      ss.sql(s"INSERT INTO graftivm.t.mv_$label " +
+        s"SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat")
+      val baseDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftivm", s"t__base_$label")
+      val vSeed = MemCatalog.currentVersion(baseDir)
+      // FIXED change set, identical at every scale: 200 appended rows with
+      // keys above any copy's stride, plus an update of the ≤100 smallest
+      // keys (copy 0's head — the same physical rows at sf0.1 and sf1)
+      ss.sql(s"INSERT INTO graftivm.t.base_$label " +
+        "SELECT id, CAST(id % 97 AS BIGINT), id FROM range(20000000000, 20000000200)")
+      val k100 = ss.sql(
+        s"SELECT max(k) FROM (SELECT k FROM graftivm.t.base_$label ORDER BY k LIMIT 100)")
+        .head().getLong(0)
+      ss.sql(s"UPDATE graftivm.t.base_$label SET cents = cents + 1 WHERE k <= $k100")
+      // timed: the incremental maintenance alone — net CDF from vSeed+1,
+      // signed-delta MERGE per micro-batch (Gupta–Mumick)
+      val t0 = System.nanoTime()
+      s.drain(ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .option("startingVersion", vSeed + 1)
+        .table(s"graftivm.t.base_$label")
+        .select(col("cat"), col("cents"), col("_change_type"))
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          graft.sources.Formats.mergeSignedDeltas(batch, s"graftivm.t.mv_$label")
+        })
+      val maintain = (System.nanoTime() - t0) / 1e9
+      // correctness rider: incremental == recompute, else the timing is void
+      val bad = ss.sql(
+        s"""SELECT count(*) FROM (
+           |  (SELECT cat, n_rows, sum_cents FROM graftivm.t.mv_$label
+           |   EXCEPT
+           |   SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat)
+           |  UNION ALL
+           |  (SELECT cat, count(*), sum(cents) FROM graftivm.t.base_$label GROUP BY cat
+           |   EXCEPT
+           |   SELECT cat, n_rows, sum_cents FROM graftivm.t.mv_$label))""".stripMargin)
+        .head().getLong(0)
+      require(bad == 0, s"IVM probe: maintained MV diverged from recompute at $label")
+      // SERVING flat-line — the read half ([[graft.plans.MvRewrite]]): the
+      // watermark-armed rewrite answers the SAME aggregate from the
+      // maintained MV. Timed against `recompute` (the direct base
+      // aggregate above): served latency must stay flat as the base grows
+      // 10×, because the rewritten plan's input is the MV's 97 rows.
+      val s2 = ss.newSession()
+      s2.conf.set("spark.sql.catalog.graftivm",
+        classOf[graft.sources.v2.MemCatalog].getName)
+      graft.plans.MvRewrite.install(s2)
+      val mvDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftivm", s"t__mv_$label")
+      s2.sql(s"ALTER TABLE graftivm.t.mv_$label SET TBLPROPERTIES(" +
+        s"'graft.mv.basedOn' = '${MemCatalog.currentVersion(baseDir)}')")
+      val d = graft.plans.MvRewrite.registerMaintained(s2,
+        s"graftivm.t.base_$label", s"graftivm.t.mv_$label", baseDir, mvDir,
+        Seq("cat"), Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
+      val serve = try {
+        val aggSql = s"SELECT cat, count(*) AS n, sum(cents) AS sc " +
+          s"FROM graftivm.t.base_$label GROUP BY cat"
+        val armed = s2.sql(aggSql).queryExecution.optimizedPlan.collect {
+          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+            s.relation.table.name()
+        }.toSet == Set(d.mvName)
+        require(armed, s"IVM probe: the serving rewrite did not arm at $label")
+        val ts0 = System.nanoTime()
+        s2.sql(aggSql).count()
+        (System.nanoTime() - ts0) / 1e9
+      } finally graft.plans.MvRewrite.unregister(d.baseName)
+      (baseRows, maintain, recompute, serve)
+    }
 
   /** RE-CLUSTER FLAT-LINE — the O(stale) proof for the incremental
     * re-cluster ([[graft.sources.v2.MemCatalog.compact]]'s wave path):

@@ -43,13 +43,7 @@ object Verify {
           val d = Paths.get(s"$outDir/$name")
           try {
             // replace any partial dump with an explicit error marker
-            if (Files.exists(d)) {
-              import scala.jdk.CollectionConverters._
-              val walk = Files.walk(d)
-              try walk.sorted(java.util.Comparator.reverseOrder())
-                .iterator().asScala.foreach(Files.deleteIfExists(_))
-              finally walk.close()
-            }
+            graft.sources.v2.MemCatalog.deleteRecursively(d)
             Files.createDirectories(d)
             Files.writeString(d.resolve("_GRAFT_ERROR.txt"), msg + "\n")
           } catch { case _: Throwable => () }

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import graft.streaming.BoundedStream
 
 /** Non-parquet SOURCE coverage at the verified-query level: SinksSpec
   * proves CSV/JSON/ORC round-trips in-process, but a registry query must
@@ -25,6 +27,10 @@ import org.apache.spark.sql.functions._
   * and the oracle read it within the same run.
   */
 object Formats {
+
+  /** Registers the writable catalog as `graftmem` on a session. */
+  private val MemCatalogConf =
+    Map("spark.sql.catalog.graftmem" -> classOf[graft.sources.v2.MemCatalog].getName)
 
   /** Fixed export path — embedded verbatim in the oracle SQL, so it must
     * be identical in the query and the `read_csv` call; it must also
@@ -77,11 +83,7 @@ object Formats {
     // materialize before deleting the temp export (the returned plan is
     // re-executed by Verify/Bench after this function returns)
     val pinned = csvQuarantinePlan(spark, dir, path.toString).localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(path)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    graft.sources.v2.MemCatalog.deleteRecursively(path)
     pinned
   }
 
@@ -406,11 +408,7 @@ object Formats {
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("total_cents"))
       .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(path)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
+    graft.sources.v2.MemCatalog.deleteRecursively(path)
     pinned
   }
 
@@ -594,108 +592,100 @@ object Formats {
     * layout assumptions), and `commit_versions_stamped` (the
     * `_commit_version` column covers exactly 0..head).
     */
-  def dsv2TableChangesTvf(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.sources.v2.TableChanges.register(ss)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_tvf_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.tvf_t AS
-        |SELECT CAST(o_orderkey % 37 AS BIGINT) AS k, count(*) AS n,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_tvf_orders GROUP BY 1""".stripMargin) // v0
-    ss.sql("INSERT INTO graftmem.tmp.tvf_t VALUES (501, 1, 111)") // v1
-    ss.sql("UPDATE graftmem.tmp.tvf_t SET cents = cents + 1 WHERE k % 6 = 2") // v2
-    ss.sql("DELETE FROM graftmem.tmp.tvf_t WHERE k % 9 = 4") // v3
-    // rider 2: the bounded [2,2] window nets to the UPDATE's exact cents
-    // delta — +1 per k%6=2 row present at v1 (counted via time travel,
-    // zero layout assumptions; untouched rows of rewritten files cancel)
-    val netW2 = ss.sql(
-      """SELECT sum(CASE WHEN _change_type = 'insert' THEN cents ELSE -cents END)
-        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
-      .head().getLong(0)
-    val touched = ss.sql(
-      "SELECT count(*) FROM graftmem.tmp.tvf_t VERSION AS OF 1 WHERE k % 6 = 2")
-      .head().getLong(0)
-    val boundedWindow = netW2 == touched
-    // rider 3: _commit_version covers exactly 0..head and
-    // _commit_timestamp is non-decreasing in version (wall-clock values
-    // can't be oracle-gated; the ORDER contract can)
-    val vc = ss.sql(
-      """SELECT _commit_version, max(CAST(_commit_timestamp AS BIGINT)) AS mx,
-        |       min(CAST(_commit_timestamp AS BIGINT)) AS mn
-        |FROM table_changes('graftmem.tmp.tvf_t', 0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin).collect()
-    val versionsStamped = vc.map(_.getLong(0)).toSet == (0L to 3L).toSet &&
-      vc.forall(r => r.getLong(1) == r.getLong(2)) && // one ts per commit
-      vc.sliding(2).forall {
-        case Array(a, b) => a.getLong(1) <= b.getLong(1)
-        case _ => true
-      }
-    // rider 4: NET mode (4th arg) — the update window emits Delta-CDC
-    // update_preimage/update_postimage rows whose per-key cents delta
-    // matches the raw window's net, and untouched rows of the rewritten
-    // file groups cancel inside the diff (no insert/delete noise)
-    val netRows = ss.sql(
-      """SELECT _change_type,
-        |       sum(CASE WHEN _change_type = 'update_postimage' THEN cents
-        |                WHEN _change_type = 'update_preimage' THEN -cents
-        |                ELSE 0 END) AS d
-        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2, true)
-        |GROUP BY 1""".stripMargin).collect()
-    val netWindow =
-      netRows.map(_.getString(0)).toSet ==
-        Set("update_preimage", "update_postimage") &&
-        netRows.map(_.getLong(1)).sum == netW2
-    // rider 1: the TVF is multiset-identical to a REAL drained streaming
-    // change-feed run over the same versions
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tvf-ckpt")
-    val qname = "graft_tvf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.option("changefeed", "true")
-      .table("graftmem.tmp.tvf_t")
-      .select(col("k"), col("n"), col("cents"), col("_change_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    graft.sources.v2.MemCatalog.deleteRecursively(ckpt)
-    val tvfRows = ss.sql(
-      """SELECT k, n, cents, _change_type
-        |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)""".stripMargin)
-    val equalsStream =
-      tvfRows.exceptAll(drained).isEmpty && drained.exceptAll(tvfRows).isEmpty
-    // rider 5: `WHERE _commit_version = 2` PUSHES DOWN — the physical
-    // scan narrows its planned window to versions=[2, 2] (O(one
-    // commit's delta), not a full replay filtered after the fact), and
-    // the narrowed result still equals the explicit [2,2] window
-    val narrowed = ss.sql(
-      """SELECT k, n, cents, _change_type
-        |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)
-        |WHERE _commit_version = 2""".stripMargin)
-    val explicitW2 = ss.sql(
-      """SELECT k, n, cents, _change_type
-        |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
-    val versionPushdown =
-      narrowed.queryExecution.executedPlan.toString.contains("versions=[2, 2]") &&
-        narrowed.exceptAll(explicitW2).isEmpty &&
-        explicitW2.exceptAll(narrowed).isEmpty
-    // the gate: net reconstruction from the TVF == the final state
-    ss.sql(
-      """SELECT k,
-        |       sum(CASE WHEN _change_type = 'insert' THEN n ELSE -n END) AS n,
-        |       sum(CASE WHEN _change_type = 'insert' THEN cents ELSE -cents END) AS cents
-        |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)
-        |GROUP BY k
-        |HAVING sum(CASE WHEN _change_type = 'insert' THEN n ELSE -n END) <> 0""".stripMargin)
-      .withColumn("tvf_equals_stream", lit(equalsStream))
-      .withColumn("tvf_bounded_window", lit(boundedWindow))
-      .withColumn("commit_versions_stamped", lit(versionsStamped))
-      .withColumn("tvf_net_window", lit(netWindow))
-      .withColumn("version_pushdown_narrows", lit(versionPushdown))
-  }
+  def dsv2TableChangesTvf(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "tvf", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      graft.sources.v2.TableChanges.register(ss)
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_tvf_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.tvf_t AS
+          |SELECT CAST(o_orderkey % 37 AS BIGINT) AS k, count(*) AS n,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_tvf_orders GROUP BY 1""".stripMargin) // v0
+      ss.sql("INSERT INTO graftmem.tmp.tvf_t VALUES (501, 1, 111)") // v1
+      ss.sql("UPDATE graftmem.tmp.tvf_t SET cents = cents + 1 WHERE k % 6 = 2") // v2
+      ss.sql("DELETE FROM graftmem.tmp.tvf_t WHERE k % 9 = 4") // v3
+      // rider 2: the bounded [2,2] window nets to the UPDATE's exact cents
+      // delta — +1 per k%6=2 row present at v1 (counted via time travel,
+      // zero layout assumptions; untouched rows of rewritten files cancel)
+      val netW2 = ss.sql(
+        """SELECT sum(CASE WHEN _change_type = 'insert' THEN cents ELSE -cents END)
+          |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
+        .head().getLong(0)
+      val touched = ss.sql(
+        "SELECT count(*) FROM graftmem.tmp.tvf_t VERSION AS OF 1 WHERE k % 6 = 2")
+        .head().getLong(0)
+      val boundedWindow = netW2 == touched
+      // rider 3: _commit_version covers exactly 0..head and
+      // _commit_timestamp is non-decreasing in version (wall-clock values
+      // can't be oracle-gated; the ORDER contract can)
+      val vc = ss.sql(
+        """SELECT _commit_version, max(CAST(_commit_timestamp AS BIGINT)) AS mx,
+          |       min(CAST(_commit_timestamp AS BIGINT)) AS mn
+          |FROM table_changes('graftmem.tmp.tvf_t', 0)
+          |GROUP BY 1 ORDER BY 1""".stripMargin).collect()
+      val versionsStamped = vc.map(_.getLong(0)).toSet == (0L to 3L).toSet &&
+        vc.forall(r => r.getLong(1) == r.getLong(2)) && // one ts per commit
+        vc.sliding(2).forall {
+          case Array(a, b) => a.getLong(1) <= b.getLong(1)
+          case _ => true
+        }
+      // rider 4: NET mode (4th arg) — the update window emits Delta-CDC
+      // update_preimage/update_postimage rows whose per-key cents delta
+      // matches the raw window's net, and untouched rows of the rewritten
+      // file groups cancel inside the diff (no insert/delete noise)
+      val netRows = ss.sql(
+        """SELECT _change_type,
+          |       sum(CASE WHEN _change_type = 'update_postimage' THEN cents
+          |                WHEN _change_type = 'update_preimage' THEN -cents
+          |                ELSE 0 END) AS d
+          |FROM table_changes('graftmem.tmp.tvf_t', 2, 2, true)
+          |GROUP BY 1""".stripMargin).collect()
+      val netWindow =
+        netRows.map(_.getString(0)).toSet ==
+          Set("update_preimage", "update_postimage") &&
+          netRows.map(_.getLong(1)).sum == netW2
+      // rider 1: the TVF is multiset-identical to a REAL drained streaming
+      // change-feed run over the same versions
+      s.drain(s.memory(ss.readStream.option("changefeed", "true")
+        .table("graftmem.tmp.tvf_t")
+        .select(col("k"), col("n"), col("cents"), col("_change_type")),
+        OutputMode.Append()))
+      val drained = s.memoryRows
+      val tvfRows = ss.sql(
+        """SELECT k, n, cents, _change_type
+          |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)""".stripMargin)
+      val equalsStream =
+        tvfRows.exceptAll(drained).isEmpty && drained.exceptAll(tvfRows).isEmpty
+      // rider 5: `WHERE _commit_version = 2` PUSHES DOWN — the physical
+      // scan narrows its planned window to versions=[2, 2] (O(one
+      // commit's delta), not a full replay filtered after the fact), and
+      // the narrowed result still equals the explicit [2,2] window
+      val narrowed = ss.sql(
+        """SELECT k, n, cents, _change_type
+          |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)
+          |WHERE _commit_version = 2""".stripMargin)
+      val explicitW2 = ss.sql(
+        """SELECT k, n, cents, _change_type
+          |FROM table_changes('graftmem.tmp.tvf_t', 2, 2)""".stripMargin)
+      val versionPushdown =
+        narrowed.queryExecution.executedPlan.toString.contains("versions=[2, 2]") &&
+          narrowed.exceptAll(explicitW2).isEmpty &&
+          explicitW2.exceptAll(narrowed).isEmpty
+      // the gate: net reconstruction from the TVF == the final state
+      ss.sql(
+        """SELECT k,
+          |       sum(CASE WHEN _change_type = 'insert' THEN n ELSE -n END) AS n,
+          |       sum(CASE WHEN _change_type = 'insert' THEN cents ELSE -cents END) AS cents
+          |FROM table_changes('graftmem.tmp.tvf_t', 0, 3)
+          |GROUP BY k
+          |HAVING sum(CASE WHEN _change_type = 'insert' THEN n ELSE -n END) <> 0""".stripMargin)
+        .withColumn("tvf_equals_stream", lit(equalsStream))
+        .withColumn("tvf_bounded_window", lit(boundedWindow))
+        .withColumn("commit_versions_stamped", lit(versionsStamped))
+        .withColumn("tvf_net_window", lit(netWindow))
+        .withColumn("version_pushdown_narrows", lit(versionPushdown))
+    }
 
   /** THE TVF'S STREAMING TWIN — `spark.readStream.table(
     * '<table>.changes_<start>_<end>')`: the same bounded change window
@@ -716,49 +706,40 @@ object Formats {
     * consumer at a controlled rate, with restart-safe offsets, without
     * ever scanning the base table.
     */
-  def dsv2TvfStream(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.sources.v2.TableChanges.register(ss)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_tvs_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.tvs AS
-        |SELECT CAST(o_orderkey % 41 AS BIGINT) AS k, count(*) AS n,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_tvs_orders GROUP BY 1""".stripMargin) // v0
-    ss.sql("INSERT INTO graftmem.tmp.tvs VALUES (601, 1, 222)") // v1
-    ss.sql("UPDATE graftmem.tmp.tvs SET cents = cents + 2 WHERE k % 7 = 3") // v2
-    ss.sql("DELETE FROM graftmem.tmp.tvs WHERE k % 11 = 5") // v3
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tvs-ckpt")
-    val qname = "graft_tvs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.option("maxVersionsPerTrigger", "1")
-      .table("graftmem.tmp.tvs.changes_0_3")
-      .select(col("k"), col("n"), col("cents"),
-        col("_change_type"), col("_commit_version"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    // pacing: four commits, four non-empty micro-batches (one each)
-    val paced = q.recentProgress.count(_.numInputRows > 0) == 4 &&
-      q.recentProgress.filter(_.numInputRows > 0).length == 4
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    graft.sources.v2.MemCatalog.deleteRecursively(ckpt)
-    val batch = ss.sql(
-      """SELECT k, n, cents, _change_type, _commit_version
-        |FROM table_changes('graftmem.tmp.tvs', 0, 3)""".stripMargin)
-    val equalsTvf =
-      drained.exceptAll(batch).isEmpty && batch.exceptAll(drained).isEmpty
-    // fold the drained feed: net reconstruction == the final table
-    val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
-    drained.groupBy("k")
-      .agg(sum(sign * col("n")).as("n"), sum(sign * col("cents")).as("cents"))
-      .filter(col("n") =!= 0)
-      .withColumn("stream_equals_tvf", lit(equalsTvf))
-      .withColumn("one_commit_per_trigger", lit(paced))
-  }
+  def dsv2TvfStream(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "tvs", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      graft.sources.v2.TableChanges.register(ss)
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_tvs_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.tvs AS
+          |SELECT CAST(o_orderkey % 41 AS BIGINT) AS k, count(*) AS n,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_tvs_orders GROUP BY 1""".stripMargin) // v0
+      ss.sql("INSERT INTO graftmem.tmp.tvs VALUES (601, 1, 222)") // v1
+      ss.sql("UPDATE graftmem.tmp.tvs SET cents = cents + 2 WHERE k % 7 = 3") // v2
+      ss.sql("DELETE FROM graftmem.tmp.tvs WHERE k % 11 = 5") // v3
+      val progress = s.drain(s.memory(ss.readStream.option("maxVersionsPerTrigger", "1")
+        .table("graftmem.tmp.tvs.changes_0_3")
+        .select(col("k"), col("n"), col("cents"),
+          col("_change_type"), col("_commit_version")),
+        OutputMode.Append()))
+      // pacing: four commits, four non-empty micro-batches (one each)
+      val paced = progress.count(_.numInputRows > 0) == 4
+      val drained = s.memoryRows
+      val batch = ss.sql(
+        """SELECT k, n, cents, _change_type, _commit_version
+          |FROM table_changes('graftmem.tmp.tvs', 0, 3)""".stripMargin)
+      val equalsTvf =
+        drained.exceptAll(batch).isEmpty && batch.exceptAll(drained).isEmpty
+      // fold the drained feed: net reconstruction == the final table
+      val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
+      drained.groupBy("k")
+        .agg(sum(sign * col("n")).as("n"), sum(sign * col("cents")).as("cents"))
+        .filter(col("n") =!= 0)
+        .withColumn("stream_equals_tvf", lit(equalsTvf))
+        .withColumn("one_commit_per_trigger", lit(paced))
+    }
 
   /** INCREMENTAL VIEW MAINTENANCE IN PURE SQL — the composition the
     * `table_changes` TVF exists for: `dsv2_mv_incremental` maintains an
@@ -974,31 +955,15 @@ object Formats {
     * replay — proving offset bookkeeping loses and duplicates nothing
     * across the ~n/step micro-batches.
     */
-  def dsv2StreamAgg(spark: SparkSession, dir: String): DataFrame = {
-    // same per-run session clone as every bounded streaming run: isolated
-    // SQLConf, fixture-scale state-store partitioning (see
-    // EventStreams.streamingSession) — the ~n/step batches each commit
-    // per-partition state, so 32 stores was pure fixed cost here too
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-seq-stream-ckpt")
-    val qname = "graft_seq_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.format("graft.sources.v2.SeqStreamSource")
-      .option("n", "50000").option("step", "10000").option("parts", "4").load()
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_rows"), sum("val").as("sum_val"))
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    out
-  }
+  def dsv2StreamAgg(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "seqagg") { s =>
+      s.drain(s.memory(s.session.readStream.format("graft.sources.v2.SeqStreamSource")
+        .option("n", "50000").option("step", "10000").option("parts", "4").load()
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("n_rows"), sum("val").as("sum_val")),
+        OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** SCHEMA EVOLUTION through the catalog SPI (`alterTable` +
     * `TableChange.AddColumn`): `ALTER TABLE ... ADD COLUMN` widens the
@@ -1392,36 +1357,23 @@ object Formats {
     * the same table now serves batch reads, time-travel reads, DML
     * writes, AND a streaming tail — the full lakehouse table contract.
     */
-  def dsv2StreamTable(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_stt_orders")
-    def slice(pri: String): String =
-      s"""SELECT o_orderkey, o_orderpriority AS pri,
-         |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-         |FROM graft_stt_orders WHERE o_orderpriority = '$pri'""".stripMargin
-    ss.sql(s"CREATE OR REPLACE TABLE graftmem.tmp.stt_orders AS ${slice("1-URGENT")}")
-    ss.sql(s"INSERT INTO graftmem.tmp.stt_orders ${slice("2-HIGH")}")
-    ss.sql(s"INSERT INTO graftmem.tmp.stt_orders ${slice("3-MEDIUM")}")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memtail-ckpt")
-    val qname = "graft_memtail_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.table("graftmem.tmp.stt_orders")
-      .groupBy(col("pri"))
-      .agg(count(lit(1)).as("n_orders"), sum("cents").as("cents"))
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    out
-  }
+  def dsv2StreamTable(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "memtail", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_stt_orders")
+      def slice(pri: String): String =
+        s"""SELECT o_orderkey, o_orderpriority AS pri,
+           |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           |FROM graft_stt_orders WHERE o_orderpriority = '$pri'""".stripMargin
+      ss.sql(s"CREATE OR REPLACE TABLE graftmem.tmp.stt_orders AS ${slice("1-URGENT")}")
+      ss.sql(s"INSERT INTO graftmem.tmp.stt_orders ${slice("2-HIGH")}")
+      ss.sql(s"INSERT INTO graftmem.tmp.stt_orders ${slice("3-MEDIUM")}")
+      s.drain(s.memory(ss.readStream.table("graftmem.tmp.stt_orders")
+        .groupBy(col("pri"))
+        .agg(count(lit(1)).as("n_orders"), sum("cents").as("cents")),
+        OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** STREAMING CHANGE FEED of the catalog table — the row-level CDF tail
     * (`readStream.option("changefeed", "true").table(t)` + the
@@ -1442,44 +1394,32 @@ object Formats {
     * (how rows pack into rewritten files) cancel in the fold, so the
     * result is layout-independent by construction.
     */
-  def dsv2CdfStream(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdf_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.cdf_bands AS
-        |SELECT CAST(o_custkey % 5 AS BIGINT) AS band, o_orderstatus AS status,
-        |       count(*) AS n_orders,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_cdf_orders GROUP BY 1, 2""".stripMargin)
-    ss.sql("INSERT INTO graftmem.tmp.cdf_bands VALUES (77, 'Z', 5, 1234)")
-    ss.sql("UPDATE graftmem.tmp.cdf_bands SET cents = cents + n_orders WHERE band >= 3")
-    ss.sql("DELETE FROM graftmem.tmp.cdf_bands WHERE band = 1")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdf-ckpt")
-    val qname = "graft_memcdf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream.option("changefeed", "true").table("graftmem.tmp.cdf_bands")
-      .select(col("band"), col("status"), col("n_orders"), col("cents"),
-        col("_change_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    // fold the feed: the net change per key IS the final table
-    val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
-    drained
-      .groupBy("band", "status")
-      .agg(sum(sign * col("n_orders")).as("n_orders"),
-        sum(sign * col("cents")).as("cents"))
-      .filter(col("n_orders") =!= 0)
-  }
+  def dsv2CdfStream(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "memcdf", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_cdf_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.cdf_bands AS
+          |SELECT CAST(o_custkey % 5 AS BIGINT) AS band, o_orderstatus AS status,
+          |       count(*) AS n_orders,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_cdf_orders GROUP BY 1, 2""".stripMargin)
+      ss.sql("INSERT INTO graftmem.tmp.cdf_bands VALUES (77, 'Z', 5, 1234)")
+      ss.sql("UPDATE graftmem.tmp.cdf_bands SET cents = cents + n_orders WHERE band >= 3")
+      ss.sql("DELETE FROM graftmem.tmp.cdf_bands WHERE band = 1")
+      s.drain(s.memory(ss.readStream.option("changefeed", "true").table("graftmem.tmp.cdf_bands")
+        .select(col("band"), col("status"), col("n_orders"), col("cents"),
+          col("_change_type")),
+        OutputMode.Append()))
+      val drained = s.memoryRows
+      // fold the feed: the net change per key IS the final table
+      val sign = when(col("_change_type") === "delete", lit(-1L)).otherwise(lit(1L))
+      drained
+        .groupBy("band", "status")
+        .agg(sum(sign * col("n_orders")).as("n_orders"),
+          sum(sign * col("cents")).as("cents"))
+        .filter(col("n_orders") =!= 0)
+    }
 
   /** NET CHANGE FEED — the row-level CDF of [[dsv2CdfStream]] upgraded
     * to the full Delta-CDC classification
@@ -1501,51 +1441,38 @@ object Formats {
     * prove the maintenance commit actually ran (and contributed zero
     * rows: any leak would inflate a class count and break the hash).
     */
-  def dsv2CdfNet(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdfnet_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.cdfnet_bands AS
-        |SELECT CAST(o_custkey % 5 AS BIGINT) AS band, o_orderstatus AS status,
-        |       count(*) AS n_orders,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_cdfnet_orders GROUP BY 1, 2""".stripMargin)
-    ss.sql("INSERT INTO graftmem.tmp.cdfnet_bands VALUES (77, 'Z', 5, 1234)")
-    ss.sql("UPDATE graftmem.tmp.cdfnet_bands SET cents = cents + n_orders WHERE band >= 3")
-    ss.sql("DELETE FROM graftmem.tmp.cdfnet_bands WHERE band = 1")
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdfnet_bands")
-    val vBefore = graft.sources.v2.MemCatalog.currentVersion(tableDir)
-    graft.sources.v2.MemCatalog.compact(tableDir)
-    val compacted =
-      graft.sources.v2.MemCatalog.currentVersion(tableDir) == vBefore + 1 &&
-        graft.sources.v2.MemCatalog.readManifestFull(tableDir, vBefore + 1).op == "optimize"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdfnet-ckpt")
-    val qname = "graft_memcdfnet_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .table("graftmem.tmp.cdfnet_bands")
-      .select(col("n_orders"), col("cents"), col("_change_type"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .format("memory").queryName(qname).start()
-    try q.processAllAvailable() finally q.stop()
-    val drained = ss.table(qname).localCheckpoint(true)
-    ss.catalog.dropTempView(qname)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    drained
-      .groupBy(col("_change_type").as("change_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum("n_orders").as("sum_orders"),
-        sum("cents").as("sum_cents"))
-      .withColumn("compacted", lit(compacted))
-  }
+  def dsv2CdfNet(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "memcdfnet", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_cdfnet_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.cdfnet_bands AS
+          |SELECT CAST(o_custkey % 5 AS BIGINT) AS band, o_orderstatus AS status,
+          |       count(*) AS n_orders,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_cdfnet_orders GROUP BY 1, 2""".stripMargin)
+      ss.sql("INSERT INTO graftmem.tmp.cdfnet_bands VALUES (77, 'Z', 5, 1234)")
+      ss.sql("UPDATE graftmem.tmp.cdfnet_bands SET cents = cents + n_orders WHERE band >= 3")
+      ss.sql("DELETE FROM graftmem.tmp.cdfnet_bands WHERE band = 1")
+      val tableDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdfnet_bands")
+      val vBefore = graft.sources.v2.MemCatalog.currentVersion(tableDir)
+      graft.sources.v2.MemCatalog.compact(tableDir)
+      val compacted =
+        graft.sources.v2.MemCatalog.currentVersion(tableDir) == vBefore + 1 &&
+          graft.sources.v2.MemCatalog.readManifestFull(tableDir, vBefore + 1).op == "optimize"
+      s.drain(s.memory(ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .table("graftmem.tmp.cdfnet_bands")
+        .select(col("n_orders"), col("cents"), col("_change_type")),
+        OutputMode.Append()))
+      s.memoryRows
+        .groupBy(col("_change_type").as("change_type"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum("n_orders").as("sum_orders"),
+          sum("cents").as("sum_cents"))
+        .withColumn("compacted", lit(compacted))
+    }
 
   /** END-TO-END CDC PIPELINE over the lakehouse catalog — the
     * composition every CDC replication is built on, with EVERY stage a
@@ -1565,57 +1492,46 @@ object Formats {
     * sides, restartable from the checkpoint + replica state. At 100 TB
     * the MERGE is the same statement; only the COW group sizes grow.
     */
-  def dsv2CdcPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcp_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.cdc_src AS
-        |SELECT CAST(o_orderkey % 40 AS BIGINT) AS k, count(*) AS n_orders,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_cdcp_orders GROUP BY 1""".stripMargin) // v0
-    ss.sql("INSERT INTO graftmem.tmp.cdc_src VALUES (777, 1, 999)") // v1
-    ss.sql("UPDATE graftmem.tmp.cdc_src SET cents = cents - n_orders WHERE k % 4 = 0") // v2
-    ss.sql("DELETE FROM graftmem.tmp.cdc_src WHERE k >= 35 AND k < 40") // v3: COW
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdc_dst")
-    ss.sql("CREATE TABLE graftmem.tmp.cdc_dst (k BIGINT, n_orders BIGINT, cents BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memcdcp-ckpt")
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .table("graftmem.tmp.cdc_src")
-      .select(col("k"), col("n_orders"), col("cents"), col("_change_type"))
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val view = "graft_cdcp_batch"
-        batch.createOrReplaceTempView(view)
-        batch.sparkSession.sql(
-          s"""MERGE INTO graftmem.tmp.cdc_dst r USING (
-             |  SELECT k, max_by(n_orders, ord) AS n_orders,
-             |         max_by(cents, ord) AS cents, max(ord) AS ord
-             |  FROM (SELECT k, n_orders, cents,
-             |               CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                    THEN 1 ELSE 0 END AS ord
-             |        FROM $view)
-             |  GROUP BY k) s
-             |ON r.k = s.k
-             |WHEN MATCHED AND s.ord = 0 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET n_orders = s.n_orders, cents = s.cents
-             |WHEN NOT MATCHED AND s.ord = 1 THEN
-             |  INSERT (k, n_orders, cents) VALUES (s.k, s.n_orders, s.cents)""".stripMargin)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdc_dst")
-      .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    out
-  }
+  def dsv2CdcPipeline(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "memcdcp", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcp_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.cdc_src AS
+          |SELECT CAST(o_orderkey % 40 AS BIGINT) AS k, count(*) AS n_orders,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_cdcp_orders GROUP BY 1""".stripMargin) // v0
+      ss.sql("INSERT INTO graftmem.tmp.cdc_src VALUES (777, 1, 999)") // v1
+      ss.sql("UPDATE graftmem.tmp.cdc_src SET cents = cents - n_orders WHERE k % 4 = 0") // v2
+      ss.sql("DELETE FROM graftmem.tmp.cdc_src WHERE k >= 35 AND k < 40") // v3: COW
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdc_dst")
+      ss.sql("CREATE TABLE graftmem.tmp.cdc_dst (k BIGINT, n_orders BIGINT, cents BIGINT)")
+      s.drain(ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .table("graftmem.tmp.cdc_src")
+        .select(col("k"), col("n_orders"), col("cents"), col("_change_type"))
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val view = "graft_cdcp_batch"
+          batch.createOrReplaceTempView(view)
+          batch.sparkSession.sql(
+            s"""MERGE INTO graftmem.tmp.cdc_dst r USING (
+               |  SELECT k, max_by(n_orders, ord) AS n_orders,
+               |         max_by(cents, ord) AS cents, max(ord) AS ord
+               |  FROM (SELECT k, n_orders, cents,
+               |               CASE WHEN _change_type IN ('insert', 'update_postimage')
+               |                    THEN 1 ELSE 0 END AS ord
+               |        FROM $view)
+               |  GROUP BY k) s
+               |ON r.k = s.k
+               |WHEN MATCHED AND s.ord = 0 THEN DELETE
+               |WHEN MATCHED THEN UPDATE SET n_orders = s.n_orders, cents = s.cents
+               |WHEN NOT MATCHED AND s.ord = 1 THEN
+               |  INSERT (k, n_orders, cents) VALUES (s.k, s.n_orders, s.cents)""".stripMargin)
+          ()
+        })
+      ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdc_dst").localCheckpoint(true)
+    }
 
   /** INCREMENTAL MATERIALIZED-VIEW MAINTENANCE from the net change feed
     * — the delta rule for self-maintainable aggregates (Gupta & Mumick's
@@ -1636,58 +1552,58 @@ object Formats {
     * base-table size, and the MV's COW rewrite touches only the file
     * groups whose keys changed.
     */
-  def dsv2MvIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_mvinc_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.mv_src AS
-        |SELECT k, CAST(k % 7 AS BIGINT) AS cat, cents FROM (
-        |  SELECT CAST(o_orderkey % 50 AS BIGINT) AS k,
-        |         sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |  FROM graft_mvinc_orders GROUP BY 1)""".stripMargin) // v0
-    ss.sql("INSERT INTO graftmem.tmp.mv_src " +
-      "SELECT id, CAST(id % 7 AS BIGINT), id * 10 FROM range(1000, 1010)") // v1
-    ss.sql("UPDATE graftmem.tmp.mv_src SET cents = cents + 7 WHERE k % 2 = 0") // v2
-    ss.sql("DELETE FROM graftmem.tmp.mv_src WHERE k % 7 = 3") // v3: whole group vanishes
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mv")
-    ss.sql("CREATE TABLE graftmem.tmp.mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memmvinc-ckpt")
-    val q = ss.readStream
-      .option("changefeed", "true").option("netChanges", "true")
-      .table("graftmem.tmp.mv_src")
-      .select(col("cat"), col("cents"), col("_change_type"))
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val view = "graft_mvinc_batch"
-        batch.createOrReplaceTempView(view)
-        batch.sparkSession.sql(
-          s"""MERGE INTO graftmem.tmp.mv m USING (
-             |  SELECT cat,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-             |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-             |                  THEN cents ELSE -cents END) AS d_cents
-             |  FROM $view GROUP BY cat) d
-             |ON m.cat = d.cat
-             |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET
-             |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-             |WHEN NOT MATCHED THEN
-             |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.mv")
-      .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    out
+  def dsv2MvIncremental(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "memmvinc", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_mvinc_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.mv_src AS
+          |SELECT k, CAST(k % 7 AS BIGINT) AS cat, cents FROM (
+          |  SELECT CAST(o_orderkey % 50 AS BIGINT) AS k,
+          |         sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |  FROM graft_mvinc_orders GROUP BY 1)""".stripMargin) // v0
+      ss.sql("INSERT INTO graftmem.tmp.mv_src " +
+        "SELECT id, CAST(id % 7 AS BIGINT), id * 10 FROM range(1000, 1010)") // v1
+      ss.sql("UPDATE graftmem.tmp.mv_src SET cents = cents + 7 WHERE k % 2 = 0") // v2
+      ss.sql("DELETE FROM graftmem.tmp.mv_src WHERE k % 7 = 3") // v3: whole group vanishes
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mv")
+      ss.sql("CREATE TABLE graftmem.tmp.mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
+      s.drain(ss.readStream
+        .option("changefeed", "true").option("netChanges", "true")
+        .table("graftmem.tmp.mv_src")
+        .select(col("cat"), col("cents"), col("_change_type"))
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          mergeSignedDeltas(batch, "graftmem.tmp.mv")
+        })
+      ss.sql("SELECT cat, n_rows, sum_cents FROM graftmem.tmp.mv").localCheckpoint(true)
+    }
+
+  /** Folds one net change-feed micro-batch (`cat`, `cents`,
+    * `_change_type`) into the aggregate MV `mv` (`cat`, `n_rows`,
+    * `sum_cents`) with one `MERGE INTO` — the signed-delta rule for
+    * self-maintainable aggregates: `insert`/`update_postimage` rows count
+    * +1/+cents, `delete`/`update_preimage` rows −1/−cents, pre-aggregated
+    * per group; a group whose count reaches zero is DELETED, existing
+    * groups adjust in place, new groups insert.
+    */
+  private[graft] def mergeSignedDeltas(batch: DataFrame, mv: String): Unit = {
+    val view = "graft_delta_" + mv.replace('.', '_')
+    batch.createOrReplaceTempView(view)
+    batch.sparkSession.sql(
+      s"""MERGE INTO $mv m USING (
+         |  SELECT cat,
+         |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
+         |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
+         |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
+         |                  THEN cents ELSE -cents END) AS d_cents
+         |  FROM $view GROUP BY cat) d
+         |ON m.cat = d.cat
+         |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET
+         |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
+         |WHEN NOT MATCHED THEN
+         |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
   }
 
   /** TRANSPARENT MATERIALIZED-VIEW QUERY REWRITE
@@ -1798,74 +1714,69 @@ object Formats {
     * update_preimage/postimage classification), `update_classified`
     * (the sidecar path preserves the op-tag classification).
     */
-  def dsv2CdcSidecar(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_csc_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.cdcsc AS
-        |SELECT CAST(o_orderkey % 31 AS BIGINT) AS k,
-        |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |FROM graft_csc_orders""".stripMargin) // v0
-    ss.sql("UPDATE graftmem.tmp.cdcsc SET cents = cents + 5 WHERE k % 4 = 1") // v1: COW rewrite
-    // a pure append has no retired side: the feed replays its files
-    // directly and rightly gets no sidecar
-    ss.sql("INSERT INTO graftmem.tmp.cdcsc " +
-      "SELECT CAST(900 + id AS BIGINT), CAST(id * 7 AS BIGINT) FROM range(0, 5)") // v2
-    val tableDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcsc")
-    def sidecar(v: Int, side: String) = tableDir.resolve(s"_cdc-v$v-$side.bin")
-    val sidecarWritten =
-      java.nio.file.Files.exists(sidecar(1, "pre")) &&
-        java.nio.file.Files.exists(sidecar(1, "post")) &&
-        !java.nio.file.Files.exists(sidecar(2, "pre"))
-    def drain(): Seq[(Long, Long, String)] = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcsc-ckpt")
-      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-      val q = ss.readStream
-        .option("changefeed", "true").option("netChanges", "true")
-        .option("startingVersion", 1)
-        .table("graftmem.tmp.cdcsc")
-        .select(col("k"), col("cents"), col("_change_type"))
-        .writeStream.option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          got.synchronized {
-            got ++= b.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-          }
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-      got.toSeq
-    }
-    val viaSidecar = drain()
-    // EQUIVALENCE: park the pair, re-drain through the snapshot diff
-    val parked = Seq("pre", "post").map { s =>
-      val p = sidecar(1, s)
-      val t = java.nio.file.Files.createTempFile("graft-cdcsc-park", ".bin")
-      java.nio.file.Files.move(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      (p, t)
-    }
-    val viaDiff =
-      try drain()
-      finally parked.foreach { case (p, t) =>
-        java.nio.file.Files.move(t, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  def dsv2CdcSidecar(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "cdcsc", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_csc_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.cdcsc AS
+          |SELECT CAST(o_orderkey % 31 AS BIGINT) AS k,
+          |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+          |FROM graft_csc_orders""".stripMargin) // v0
+      ss.sql("UPDATE graftmem.tmp.cdcsc SET cents = cents + 5 WHERE k % 4 = 1") // v1: COW rewrite
+      // a pure append has no retired side: the feed replays its files
+      // directly and rightly gets no sidecar
+      ss.sql("INSERT INTO graftmem.tmp.cdcsc " +
+        "SELECT CAST(900 + id AS BIGINT), CAST(id * 7 AS BIGINT) FROM range(0, 5)") // v2
+      val tableDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcsc")
+      def sidecar(v: Int, side: String) = tableDir.resolve(s"_cdc-v$v-$side.bin")
+      val sidecarWritten =
+        java.nio.file.Files.exists(sidecar(1, "pre")) &&
+          java.nio.file.Files.exists(sidecar(1, "post")) &&
+          !java.nio.file.Files.exists(sidecar(2, "pre"))
+      // each drain replays the feed from v1, so each runs on its own
+      // checkpoint: a run of its own
+      def drain(): Seq[(Long, Long, String)] =
+        BoundedStream.run(spark, "cdcsc", extraConf = MemCatalogConf) { d =>
+          val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
+          d.drain(d.session.readStream
+            .option("changefeed", "true").option("netChanges", "true")
+            .option("startingVersion", 1)
+            .table("graftmem.tmp.cdcsc")
+            .select(col("k"), col("cents"), col("_change_type"))
+            .writeStream
+            .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+              got.synchronized {
+                got ++= b.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+              }
+              ()
+            })
+          got.toSeq
+        }
+      val viaSidecar = drain()
+      // EQUIVALENCE: park the pair, re-drain through the snapshot diff
+      val parked = Seq("pre", "post").map { s =>
+        val p = sidecar(1, s)
+        val t = java.nio.file.Files.createTempFile("graft-cdcsc-park", ".bin")
+        java.nio.file.Files.move(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        (p, t)
       }
-    val feedEquiv = viaSidecar.sorted == viaDiff.sorted
-    val updateClassified =
-      viaSidecar.exists(_._3 == "update_preimage") &&
-        viaSidecar.exists(_._3 == "update_postimage")
-    ss.sql("SELECT k, cents FROM graftmem.tmp.cdcsc")
-      .withColumn("sidecar_written", lit(sidecarWritten))
-      .withColumn("feed_equiv", lit(feedEquiv))
-      .withColumn("update_classified", lit(updateClassified))
-      .localCheckpoint(true)
-  }
+      val viaDiff =
+        try drain()
+        finally parked.foreach { case (p, t) =>
+          java.nio.file.Files.move(t, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+      val feedEquiv = viaSidecar.sorted == viaDiff.sorted
+      val updateClassified =
+        viaSidecar.exists(_._3 == "update_preimage") &&
+          viaSidecar.exists(_._3 == "update_postimage")
+      ss.sql("SELECT k, cents FROM graftmem.tmp.cdcsc")
+        .withColumn("sidecar_written", lit(sidecarWritten))
+        .withColumn("feed_equiv", lit(feedEquiv))
+        .withColumn("update_classified", lit(updateClassified))
+        .localCheckpoint(true)
+    }
 
   /** ROW-ACCESS POLICY AT THE SCAN — `TBLPROPERTIES
     * ('graft.policy'='<predicate>')` hides non-matching rows from EVERY
@@ -2072,102 +1983,75 @@ object Formats {
     * a missed invalidation) is structurally impossible because the
     * watermark lives in the catalog, not in anyone's memory.
     */
-  def dsv2MvServe(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_mvs_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.mvs_base AS
-        |SELECT CAST(o_orderkey % 6 AS BIGINT) AS cat,
-        |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |FROM graft_mvs_orders""".stripMargin) // v0
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mvs_mv")
-    ss.sql("CREATE TABLE graftmem.tmp.mvs_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvs_base")
-    val mvDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvs_mv")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-mvserve-ckpt")
-    // one maintenance CYCLE: drain every unabsorbed base commit (one per
-    // epoch), folding each into the MV and stamping the watermark in the
-    // SAME foreachBatch (the scheduled-maintenance shape; restarts
-    // resume from the checkpoint)
-    def cycle(): Unit = {
-      val q = ss.readStream
+  def dsv2MvServe(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "mvserve", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_mvs_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.mvs_base AS
+          |SELECT CAST(o_orderkey % 6 AS BIGINT) AS cat,
+          |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+          |FROM graft_mvs_orders""".stripMargin) // v0
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mvs_mv")
+      ss.sql("CREATE TABLE graftmem.tmp.mvs_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
+      val baseDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvs_base")
+      val mvDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvs_mv")
+      // one maintenance CYCLE: drain every unabsorbed base commit (one per
+      // epoch), folding each into the MV and stamping the watermark in the
+      // SAME foreachBatch (the scheduled-maintenance shape; restarts
+      // resume from the run's checkpoint)
+      def cycle(): Unit = s.drain(ss.readStream
         .option("changefeed", "true").option("netChanges", "true")
         .table("graftmem.tmp.mvs_base")
         .select(col("cat"), col("cents"), col("_change_type"))
-        .writeStream.option("checkpointLocation", ckpt.toString)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-          val view = "graft_mvs_batch"
-          batch.createOrReplaceTempView(view)
-          batch.sparkSession.sql(
-            s"""MERGE INTO graftmem.tmp.mvs_mv m USING (
-               |  SELECT cat,
-               |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-               |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-               |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-               |                  THEN cents ELSE -cents END) AS d_cents
-               |  FROM $view GROUP BY cat) d
-               |ON m.cat = d.cat
-               |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-               |WHEN MATCHED THEN UPDATE SET
-               |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-               |WHEN NOT MATCHED THEN
-               |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+          mergeSignedDeltas(batch, "graftmem.tmp.mvs_mv")
           // the absorbed base version == the epoch id (one version per
           // epoch from initial offset -1); stamped HERE so watermark and
           // fold publish from the same maintenance step
           batch.sparkSession.sql("ALTER TABLE graftmem.tmp.mvs_mv " +
             s"SET TBLPROPERTIES('graft.mv.basedOn' = '$epoch')")
           ()
+        })
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.catalog.graftmem",
+        classOf[graft.sources.v2.MemCatalog].getName)
+      graft.plans.MvRewrite.install(s2)
+      val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvs_base",
+        "graftmem.tmp.mvs_mv", baseDir, mvDir, Seq("cat"),
+        Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
+      try {
+        val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
+          "FROM graftmem.tmp.mvs_base GROUP BY cat"
+        def scansMvOnly(): Boolean = {
+          val names = s2.sql(sql).queryExecution.optimizedPlan.collect {
+            case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              s.relation.table.name()
+          }.toSet
+          names == Set(d.mvName)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        cycle() // absorbs v0
+        val freshServes = scansMvOnly() &&
+          s2.sql(sql).collect().map(_.toString).sorted
+            .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+        ss.sql("UPDATE graftmem.tmp.mvs_base SET cents = cents + 3 WHERE cat = 2") // v1
+        val staleDisarms = !scansMvOnly() &&
+          s2.sql(sql).collect().map(_.toString).sorted
+            .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+        cycle() // restart from the checkpoint: absorbs v1, re-arms
+        val rearms = scansMvOnly() &&
+          s2.sql(sql).collect().map(_.toString).sorted
+            .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+        spark.sql(sql)
+          .withColumn("mv_serves_fresh", lit(freshServes))
+          .withColumn("mv_stale_disarms", lit(staleDisarms))
+          .withColumn("mv_rearms_after_drain", lit(rearms))
+          .localCheckpoint(true)
+      } finally graft.plans.MvRewrite.unregister(d.baseName)
     }
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.plans.MvRewrite.install(s2)
-    val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvs_base",
-      "graftmem.tmp.mvs_mv", baseDir, mvDir, Seq("cat"),
-      Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    try {
-      val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
-        "FROM graftmem.tmp.mvs_base GROUP BY cat"
-      def scansMvOnly(): Boolean = {
-        val names = s2.sql(sql).queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.relation.table.name()
-        }.toSet
-        names == Set(d.mvName)
-      }
-      cycle() // absorbs v0
-      val freshServes = scansMvOnly() &&
-        s2.sql(sql).collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      ss.sql("UPDATE graftmem.tmp.mvs_base SET cents = cents + 3 WHERE cat = 2") // v1
-      val staleDisarms = !scansMvOnly() &&
-        s2.sql(sql).collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      cycle() // restart from the checkpoint: absorbs v1, re-arms
-      val rearms = scansMvOnly() &&
-        s2.sql(sql).collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      val out = spark.sql(sql)
-        .withColumn("mv_serves_fresh", lit(freshServes))
-        .withColumn("mv_stale_disarms", lit(staleDisarms))
-        .withColumn("mv_rearms_after_drain", lit(rearms))
-        .localCheckpoint(true)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-      out
-    } finally graft.plans.MvRewrite.unregister(d.baseName)
-  }
 
   /** MV AUTO-REFRESH VIA COMMIT HOOK — the last manual step of
     * [[dsv2MvServe]]'s continuously-serving loop removed: nobody calls
@@ -2194,133 +2078,108 @@ object Formats {
   def dsv2MvAutorefresh(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.catalog.graftmem",
       classOf[graft.sources.v2.MemCatalog].getName)
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_mvar_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.mvar_base AS
-        |SELECT CAST(o_orderkey % 7 AS BIGINT) AS cat,
-        |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |FROM graft_mvar_orders""".stripMargin) // v0
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mvar_mv")
-    ss.sql("CREATE TABLE graftmem.tmp.mvar_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
-    val baseDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvar_base")
-    val mvDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvar_mv")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-mvauto-ckpt")
-    // one maintenance cycle == dsv2MvServe's: drain every unabsorbed base
-    // commit (one per epoch), fold it into the MV, stamp the watermark —
-    // here invoked ONLY by the commit hook, never by the test flow.
-    //
-    // START-ONCE (r15): the maintenance stream is a LONG-LIVED query — the
-    // production posture for continuous MV maintenance — lazily started by
-    // the first hook and merely DRAINED (`processAllAvailable`) by every
-    // hook after that. The r14 shape built, started, and stopped a fresh
-    // streaming query per commit hook, re-paying source init + offset-log
-    // replay + sink bring-up on every commit (measured: each cycle is a
-    // ~1 s driver-side stall between job bursts). Dropping the commit hook
-    // tears the stream down too, so a post-drop commit still leaves the MV
-    // stale exactly as before (the watermark-disarm leg is unchanged).
-    var mq: org.apache.spark.sql.streaming.StreamingQuery = null
-    val mqLock = new Object
-    def cycle(): Unit = {
-      val q = mqLock.synchronized {
-        if (mq == null) mq = ss.readStream
+    BoundedStream.run(spark, "mvauto", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_mvar_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.mvar_base AS
+          |SELECT CAST(o_orderkey % 7 AS BIGINT) AS cat,
+          |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+          |FROM graft_mvar_orders""".stripMargin) // v0
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.mvar_mv")
+      ss.sql("CREATE TABLE graftmem.tmp.mvar_mv (cat BIGINT, n_rows BIGINT, sum_cents BIGINT)")
+      val baseDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvar_base")
+      val mvDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__mvar_mv")
+      // one maintenance cycle == dsv2MvServe's: drain every unabsorbed base
+      // commit (one per epoch), fold it into the MV, stamp the watermark —
+      // here invoked ONLY by the commit hook, never by the test flow.
+      //
+      // START-ONCE (r15): the maintenance stream is a LONG-LIVED query — the
+      // production posture for continuous MV maintenance — lazily started by
+      // the first hook and merely CAUGHT UP (`BoundedStream.catchUp`) by every
+      // hook after that. The r14 shape built, started, and stopped a fresh
+      // streaming query per commit hook, re-paying source init + offset-log
+      // replay + sink bring-up on every commit (measured: each cycle is a
+      // ~1 s driver-side stall between job bursts). Dropping the commit hook
+      // tears the stream down too, so a post-drop commit still leaves the MV
+      // stale exactly as before (the watermark-disarm leg is unchanged).
+      // The run owns the query: a hook still in flight when the run closes
+      // cannot start a new one.
+      var mq: org.apache.spark.sql.streaming.StreamingQuery = null
+      val mqLock = new Object
+      def cycle(): Unit = s.catchUp(mqLock.synchronized {
+        if (mq == null) mq = s.start(ss.readStream
           .option("changefeed", "true").option("netChanges", "true")
           .table("graftmem.tmp.mvar_base")
           .select(col("cat"), col("cents"), col("_change_type"))
-          .writeStream.option("checkpointLocation", ckpt.toString)
+          .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-            val view = "graft_mvar_batch"
-            batch.createOrReplaceTempView(view)
-            batch.sparkSession.sql(
-              s"""MERGE INTO graftmem.tmp.mvar_mv m USING (
-                 |  SELECT cat,
-                 |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-                 |                  THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS d_n,
-                 |         sum(CASE WHEN _change_type IN ('insert', 'update_postimage')
-                 |                  THEN cents ELSE -cents END) AS d_cents
-                 |  FROM $view GROUP BY cat) d
-                 |ON m.cat = d.cat
-                 |WHEN MATCHED AND m.n_rows + d.d_n = 0 THEN DELETE
-                 |WHEN MATCHED THEN UPDATE SET
-                 |  n_rows = m.n_rows + d.d_n, sum_cents = m.sum_cents + d.d_cents
-                 |WHEN NOT MATCHED THEN
-                 |  INSERT (cat, n_rows, sum_cents) VALUES (d.cat, d.d_n, d.d_cents)""".stripMargin)
+            mergeSignedDeltas(batch, "graftmem.tmp.mvar_mv")
             batch.sparkSession.sql("ALTER TABLE graftmem.tmp.mvar_mv " +
               s"SET TBLPROPERTIES('graft.mv.basedOn' = '$epoch')")
             ()
-          }
-          .start()
+          })
         mq
+      })
+      def stopCycleStream(): Unit = mqLock.synchronized {
+        if (mq != null) { mq.stop(); mq = null }
       }
-      q.processAllAvailable()
-    }
-    def stopCycleStream(): Unit = mqLock.synchronized {
-      if (mq != null) { mq.stop(); mq = null }
-    }
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    graft.plans.MvRewrite.install(s2)
-    val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvar_base",
-      "graftmem.tmp.mvar_mv", baseDir, mvDir, Seq("cat"),
-      Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
-    graft.sources.v2.MemCatalog.onCommit(baseDir)(() => cycle())
-    try {
-      val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
-        "FROM graftmem.tmp.mvar_base GROUP BY cat"
-      // plan gate and answer check share ONE QueryExecution per probe (the
-      // r14 shape compiled the serve query twice per check — once for the
-      // plan inspection, once for the collect)
-      def scansMvOnly(df: DataFrame): Boolean = {
-        val names = df.queryExecution.optimizedPlan.collect {
-          case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            s.relation.table.name()
-        }.toSet
-        names == Set(d.mvName)
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.catalog.graftmem",
+        classOf[graft.sources.v2.MemCatalog].getName)
+      graft.plans.MvRewrite.install(s2)
+      val d = graft.plans.MvRewrite.registerMaintained(s2, "graftmem.tmp.mvar_base",
+        "graftmem.tmp.mvar_mv", baseDir, mvDir, Seq("cat"),
+        Map(("count", "*") -> "n_rows", ("sum", "cents") -> "sum_cents"))
+      graft.sources.v2.MemCatalog.onCommit(baseDir)(() => cycle())
+      try {
+        val sql = "SELECT cat, count(*) AS n, sum(cents) AS cents " +
+          "FROM graftmem.tmp.mvar_base GROUP BY cat"
+        // plan gate and answer check share ONE QueryExecution per probe (the
+        // r14 shape compiled the serve query twice per check — once for the
+        // plan inspection, once for the collect)
+        def scansMvOnly(df: DataFrame): Boolean = {
+          val names = df.queryExecution.optimizedPlan.collect {
+            case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              s.relation.table.name()
+          }.toSet
+          names == Set(d.mvName)
+        }
+        def matches(df: DataFrame): Boolean =
+          df.collect().map(_.toString).sorted
+            .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
+        // v1: the commit ITSELF triggers maintenance (drains v0 and v1)
+        ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 7 WHERE cat = 3")
+        graft.sources.v2.MemCatalog.awaitCommitHooks()
+        val served1 = s2.sql(sql)
+        val autoServes = scansMvOnly(served1) && matches(served1)
+        // commit storm: two back-to-back commits coalesce into ≤2 hook
+        // runs; the DELETE erases a whole group, exercising the MERGE's
+        // group-retiring DELETE leg through the auto path
+        ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 11 WHERE cat = 5")
+        ss.sql("DELETE FROM graftmem.tmp.mvar_base WHERE cat = 0")
+        graft.sources.v2.MemCatalog.awaitCommitHooks()
+        val served2 = s2.sql(sql)
+        val stormServes = scansMvOnly(served2) && matches(served2)
+        // hook dropped: the next commit leaves the MV stale; the watermark
+        // gate disarms the rewrite and answers stay correct from base —
+        // the maintenance stream is torn down WITH the hook
+        graft.sources.v2.MemCatalog.dropCommitHook(baseDir)
+        stopCycleStream()
+        ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 1 WHERE cat = 1")
+        val served3 = s2.sql(sql)
+        val droppedDisarms = !scansMvOnly(served3) && matches(served3)
+        spark.sql(sql)
+          .withColumn("auto_serves_after_commit", lit(autoServes))
+          .withColumn("storm_coalesced_serves", lit(stormServes))
+          .withColumn("dropped_hook_disarms", lit(droppedDisarms))
+          .localCheckpoint(true)
+      } finally {
+        graft.sources.v2.MemCatalog.dropCommitHook(baseDir)
+        graft.plans.MvRewrite.unregister(d.baseName)
       }
-      def matches(df: DataFrame): Boolean =
-        df.collect().map(_.toString).sorted
-          .sameElements(spark.sql(sql).collect().map(_.toString).sorted)
-      // v1: the commit ITSELF triggers maintenance (drains v0 and v1)
-      ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 7 WHERE cat = 3")
-      graft.sources.v2.MemCatalog.awaitCommitHooks()
-      val served1 = s2.sql(sql)
-      val autoServes = scansMvOnly(served1) && matches(served1)
-      // commit storm: two back-to-back commits coalesce into ≤2 hook
-      // runs; the DELETE erases a whole group, exercising the MERGE's
-      // group-retiring DELETE leg through the auto path
-      ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 11 WHERE cat = 5")
-      ss.sql("DELETE FROM graftmem.tmp.mvar_base WHERE cat = 0")
-      graft.sources.v2.MemCatalog.awaitCommitHooks()
-      val served2 = s2.sql(sql)
-      val stormServes = scansMvOnly(served2) && matches(served2)
-      // hook dropped: the next commit leaves the MV stale; the watermark
-      // gate disarms the rewrite and answers stay correct from base —
-      // the maintenance stream is torn down WITH the hook
-      graft.sources.v2.MemCatalog.dropCommitHook(baseDir)
-      stopCycleStream()
-      ss.sql("UPDATE graftmem.tmp.mvar_base SET cents = cents + 1 WHERE cat = 1")
-      val served3 = s2.sql(sql)
-      val droppedDisarms = !scansMvOnly(served3) && matches(served3)
-      val out = spark.sql(sql)
-        .withColumn("auto_serves_after_commit", lit(autoServes))
-        .withColumn("storm_coalesced_serves", lit(stormServes))
-        .withColumn("dropped_hook_disarms", lit(droppedDisarms))
-        .localCheckpoint(true)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-      out
-    } finally {
-      graft.sources.v2.MemCatalog.dropCommitHook(baseDir)
-      stopCycleStream()
-      graft.plans.MvRewrite.unregister(d.baseName)
     }
   }
 
@@ -3478,81 +3337,59 @@ object Formats {
     * reference/greeter_server.cc overwrites whole outputs (file:116) —
     * this is the row-level streaming change model its design lacks.
     */
-  def dsv2StreamCdcUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcup_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.cdcup_t
-        |TBLPROPERTIES ('graft.dml'='mor', 'graft.eqDeleteKeys'='k') AS
-        |SELECT CAST(o_orderkey % 41 AS BIGINT) AS k, count(*) AS n_orders,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_cdcup_orders GROUP BY 1""".stripMargin)
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdcup_log")
-    ss.sql(
-      """CREATE TABLE graftmem.tmp.cdcup_log
-        |(op STRING, k BIGINT, n_orders BIGINT, cents BIGINT)
-        |TBLPROPERTIES ('graft.applyCdcTo'='tmp.cdcup_t', 'graft.cdcOp'='op')""".stripMargin)
-    val cat = graft.sources.v2.MemCatalog
-    val targetDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcup_t")
-    val preLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
-    // three epoch files, one micro-batch each (mtime order is the
-    // file-source schedule under maxFilesPerTrigger=1)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-cdcup-src")
-    val t0 = System.currentTimeMillis() - 60000
-    def epochFile(name: String, sql: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdcup-stage")
-      ss.sql(sql).coalesce(1).write.mode("overwrite").parquet(s"$tmp/d")
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/d"))
-        .filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      val dst = srcDir.resolve(name)
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-      cat.deleteRecursively(tmp)
+  def dsv2StreamCdcUpsert(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "cdcup", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcup_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.cdcup_t
+          |TBLPROPERTIES ('graft.dml'='mor', 'graft.eqDeleteKeys'='k') AS
+          |SELECT CAST(o_orderkey % 41 AS BIGINT) AS k, count(*) AS n_orders,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_cdcup_orders GROUP BY 1""".stripMargin)
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdcup_log")
+      ss.sql(
+        """CREATE TABLE graftmem.tmp.cdcup_log
+          |(op STRING, k BIGINT, n_orders BIGINT, cents BIGINT)
+          |TBLPROPERTIES ('graft.applyCdcTo'='tmp.cdcup_t', 'graft.cdcOp'='op')""".stripMargin)
+      val cat = graft.sources.v2.MemCatalog
+      val targetDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcup_t")
+      val preLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
+      // three epoch files, one micro-batch each (mtime order is the
+      // file-source schedule under maxFilesPerTrigger=1)
+      s.write(ss.sql(
+        """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
+          |CAST(id * 100 AS BIGINT) AS cents FROM range(600, 610)""".stripMargin), "e1.parquet", 60)
+      s.write(ss.sql(
+        """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
+          |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (14), (600) AS u(k)
+          |UNION ALL
+          |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
+          |FROM VALUES (2), (9), (601) AS d(k)""".stripMargin), "e2.parquet", 50)
+      s.write(ss.sql(
+        """SELECT 'I' AS op, CAST(2 AS BIGINT) AS k, CAST(5 AS BIGINT) AS n_orders,
+          |       CAST(555 AS BIGINT) AS cents
+          |UNION ALL SELECT 'U', CAST(9 AS BIGINT), CAST(6 AS BIGINT),
+          |       CAST(666 AS BIGINT)""".stripMargin), "e3.parquet", 40)
+      s.drain(s.files(org.apache.spark.sql.types.StructType.fromDDL(
+        "op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")).writeStream,
+        Some("graftmem.tmp.cdcup_log"))
+      // the write-cheap contract: three epochs of deletes/upserts touched
+      // ZERO pre-existing files — appends and manifest lines only
+      val postLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
+      val cdcWriteCheap = preLive.subsetOf(postLive)
+      val eqdelPerEpoch = cat.eqDeletes(targetDir).size == 2 // e2 and e3 carry deletes
+      val landingComplete =
+        ss.table("graftmem.tmp.cdcup_log").count() == 18 // 10 + 6 + 2 raw changes
+      cat.compact(targetDir) // materialize the masks; GC applied deletes
+      val eqGcd = cat.eqDeletes(targetDir).isEmpty
+      ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcup_t")
+        .withColumn("cdc_write_cheap", lit(cdcWriteCheap))
+        .withColumn("eqdel_per_epoch", lit(eqdelPerEpoch))
+        .withColumn("landing_complete", lit(landingComplete))
+        .withColumn("eq_gcd", lit(eqGcd))
     }
-    epochFile("e1.parquet",
-      """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
-        |CAST(id * 100 AS BIGINT) AS cents FROM range(600, 610)""".stripMargin, t0)
-    epochFile("e2.parquet",
-      """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
-        |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (14), (600) AS u(k)
-        |UNION ALL
-        |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM VALUES (2), (9), (601) AS d(k)""".stripMargin, t0 + 10000)
-    epochFile("e3.parquet",
-      """SELECT 'I' AS op, CAST(2 AS BIGINT) AS k, CAST(5 AS BIGINT) AS n_orders,
-        |       CAST(555 AS BIGINT) AS cents
-        |UNION ALL SELECT 'U', CAST(9 AS BIGINT), CAST(6 AS BIGINT),
-        |       CAST(666 AS BIGINT)""".stripMargin, t0 + 20000)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcup-ckpt")
-    val q = ss.readStream
-      .schema("op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .toTable("graftmem.tmp.cdcup_log")
-    try q.processAllAvailable() finally q.stop()
-    // the write-cheap contract: three epochs of deletes/upserts touched
-    // ZERO pre-existing files — appends and manifest lines only
-    val postLive = cat.liveEntries(targetDir).map(e => (e.name, e.dv)).toSet
-    val cdcWriteCheap = preLive.subsetOf(postLive)
-    val eqdelPerEpoch = cat.eqDeletes(targetDir).size == 2 // e2 and e3 carry deletes
-    val landingComplete =
-      ss.table("graftmem.tmp.cdcup_log").count() == 18 // 10 + 6 + 2 raw changes
-    cat.compact(targetDir) // materialize the masks; GC applied deletes
-    val eqGcd = cat.eqDeletes(targetDir).isEmpty
-    cat.deleteRecursively(srcDir)
-    cat.deleteRecursively(ckpt)
-    ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcup_t")
-      .withColumn("cdc_write_cheap", lit(cdcWriteCheap))
-      .withColumn("eqdel_per_epoch", lit(eqdelPerEpoch))
-      .withColumn("landing_complete", lit(landingComplete))
-      .withColumn("eq_gcd", lit(eqGcd))
-  }
 
   /** STREAMING CDC APPLY INTO AN AUDIT BRANCH — [[dsv2StreamCdcUpsert]]'s
     * pipeline pointed at an UNPUBLISHED branch of the target
@@ -3578,89 +3415,67 @@ object Formats {
     * incident) is quarantined on the branch and dropped without ever
     * having been readable from main.
     */
-  def dsv2CdcBranchApply(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcbr_orders")
-    ss.sql(
-      """CREATE OR REPLACE TABLE graftmem.tmp.cdcbr_t
-        |TBLPROPERTIES ('graft.dml'='mor', 'graft.eqDeleteKeys'='k') AS
-        |SELECT CAST(o_orderkey % 37 AS BIGINT) AS k, count(*) AS n_orders,
-        |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        |FROM graft_cdcbr_orders GROUP BY 1""".stripMargin) // v0
-    val cat = graft.sources.v2.MemCatalog
-    val targetDir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcbr_t")
-    cat.dropBranch(targetDir, "audit")
-    cat.createBranch(targetDir, "audit")
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdcbr_log")
-    ss.sql(
-      """CREATE TABLE graftmem.tmp.cdcbr_log
-        |(op STRING, k BIGINT, n_orders BIGINT, cents BIGINT)
-        |TBLPROPERTIES ('graft.applyCdcTo'='tmp.cdcbr_t', 'graft.cdcOp'='op',
-        |               'graft.applyCdcBranch'='audit')""".stripMargin)
-    val preVersion = cat.currentVersion(targetDir)
-    val preRows = ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcbr_t")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val preNames = cat.liveEntries(targetDir).map(_.name).toSet
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-cdcbr-src")
-    val t0 = System.currentTimeMillis() - 60000
-    def epochFile(name: String, sql: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdcbr-stage")
-      ss.sql(sql).coalesce(1).write.mode("overwrite").parquet(s"$tmp/d")
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/d"))
-        .filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      val dst = srcDir.resolve(name)
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-      cat.deleteRecursively(tmp)
-    }
-    epochFile("e1.parquet",
-      """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
-        |CAST(id * 100 AS BIGINT) AS cents FROM range(500, 505)""".stripMargin, t0)
-    epochFile("e2.parquet",
-      """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
-        |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (500) AS u(k)
-        |UNION ALL
-        |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM VALUES (2), (501) AS d(k)""".stripMargin, t0 + 10000)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdcbr-ckpt")
-    val q = ss.readStream
-      .schema("op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .toTable("graftmem.tmp.cdcbr_log")
-    try q.processAllAvailable() finally q.stop()
-    // the merged truth the branch must already read and main must not
-    val expected = preRows.filterNot(r => r._1 == 2L || r._1 == 3L) ++
-      Set((3L, 77L, 3000L), (500L, 77L, 500000L),
-        (502L, 1L, 50200L), (503L, 1L, 50300L), (504L, 1L, 50400L))
-    def rowsOf(table: String): Set[(Long, Long, Long)] =
-      ss.sql(s"SELECT k, n_orders, cents FROM $table")
+  def dsv2CdcBranchApply(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "cdcbr", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      Tables.orders(ss, dir).createOrReplaceTempView("graft_cdcbr_orders")
+      ss.sql(
+        """CREATE OR REPLACE TABLE graftmem.tmp.cdcbr_t
+          |TBLPROPERTIES ('graft.dml'='mor', 'graft.eqDeleteKeys'='k') AS
+          |SELECT CAST(o_orderkey % 37 AS BIGINT) AS k, count(*) AS n_orders,
+          |       sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+          |FROM graft_cdcbr_orders GROUP BY 1""".stripMargin) // v0
+      val cat = graft.sources.v2.MemCatalog
+      val targetDir = java.nio.file.Paths.get(
+        sys.props("java.io.tmpdir"), "graft-memcat-graftmem", "tmp__cdcbr_t")
+      cat.dropBranch(targetDir, "audit")
+      cat.createBranch(targetDir, "audit")
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.cdcbr_log")
+      ss.sql(
+        """CREATE TABLE graftmem.tmp.cdcbr_log
+          |(op STRING, k BIGINT, n_orders BIGINT, cents BIGINT)
+          |TBLPROPERTIES ('graft.applyCdcTo'='tmp.cdcbr_t', 'graft.cdcOp'='op',
+          |               'graft.applyCdcBranch'='audit')""".stripMargin)
+      val preVersion = cat.currentVersion(targetDir)
+      val preRows = ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcbr_t")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val mainIsolated = cat.currentVersion(targetDir) == preVersion &&
-      rowsOf("graftmem.tmp.cdcbr_t") == preRows &&
-      rowsOf("graftmem.tmp.cdcbr_t.branch_audit") == expected
-    // both epochs' replay watermarks ride the BRANCH manifest chain
-    val bm = cat.branchManifest(targetDir, "audit")
-    val branchWatermarked = bm.txns.values.toSeq == Seq(1L) &&
-      bm.eqDels.nonEmpty
-    cat.fastForward(targetDir, "audit")
-    val publishConverts = cat.eqDeletes(targetDir).isEmpty &&
-      preNames.subsetOf(cat.liveEntries(targetDir).map(_.name).toSet) &&
-      rowsOf("graftmem.tmp.cdcbr_t") == expected
-    cat.dropBranch(targetDir, "audit")
-    cat.deleteRecursively(srcDir)
-    cat.deleteRecursively(ckpt)
-    ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcbr_t")
-      .withColumn("main_isolated_mid_audit", lit(mainIsolated))
-      .withColumn("branch_watermarked", lit(branchWatermarked))
-      .withColumn("publish_converts_eqdels", lit(publishConverts))
-  }
+      val preNames = cat.liveEntries(targetDir).map(_.name).toSet
+      s.write(ss.sql(
+        """SELECT 'I' AS op, CAST(id AS BIGINT) AS k, CAST(1 AS BIGINT) AS n_orders,
+          |CAST(id * 100 AS BIGINT) AS cents FROM range(500, 505)""".stripMargin), "e1.parquet", 60)
+      s.write(ss.sql(
+        """SELECT 'U' AS op, CAST(k AS BIGINT) AS k, CAST(77 AS BIGINT) AS n_orders,
+          |       CAST(k * 1000 AS BIGINT) AS cents FROM VALUES (3), (500) AS u(k)
+          |UNION ALL
+          |SELECT 'D', CAST(k AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
+          |FROM VALUES (2), (501) AS d(k)""".stripMargin), "e2.parquet", 50)
+      s.drain(s.files(org.apache.spark.sql.types.StructType.fromDDL(
+        "op STRING, k BIGINT, n_orders BIGINT, cents BIGINT")).writeStream,
+        Some("graftmem.tmp.cdcbr_log"))
+      // the merged truth the branch must already read and main must not
+      val expected = preRows.filterNot(r => r._1 == 2L || r._1 == 3L) ++
+        Set((3L, 77L, 3000L), (500L, 77L, 500000L),
+          (502L, 1L, 50200L), (503L, 1L, 50300L), (504L, 1L, 50400L))
+      def rowsOf(table: String): Set[(Long, Long, Long)] =
+        ss.sql(s"SELECT k, n_orders, cents FROM $table")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val mainIsolated = cat.currentVersion(targetDir) == preVersion &&
+        rowsOf("graftmem.tmp.cdcbr_t") == preRows &&
+        rowsOf("graftmem.tmp.cdcbr_t.branch_audit") == expected
+      // both epochs' replay watermarks ride the BRANCH manifest chain
+      val bm = cat.branchManifest(targetDir, "audit")
+      val branchWatermarked = bm.txns.values.toSeq == Seq(1L) &&
+        bm.eqDels.nonEmpty
+      cat.fastForward(targetDir, "audit")
+      val publishConverts = cat.eqDeletes(targetDir).isEmpty &&
+        preNames.subsetOf(cat.liveEntries(targetDir).map(_.name).toSet) &&
+        rowsOf("graftmem.tmp.cdcbr_t") == expected
+      cat.dropBranch(targetDir, "audit")
+      ss.sql("SELECT k, n_orders, cents FROM graftmem.tmp.cdcbr_t")
+        .withColumn("main_isolated_mid_audit", lit(mainIsolated))
+        .withColumn("branch_watermarked", lit(branchWatermarked))
+        .withColumn("publish_converts_eqdels", lit(publishConverts))
+    }
 
   /** EQUI-HEIGHT VALUE HISTOGRAMS for the cost-based optimizer — the
     * statistic NDV can't carry: WHERE the rows sit inside [min, max].
@@ -4290,29 +4105,19 @@ object Formats {
     * table content must equal the DuckDB `generate_series` replay:
     * exactly-once across all four epochs or the hash breaks.
     */
-  def dsv2StreamSink(spark: SparkSession, dir: String): DataFrame = {
-    val ss = graft.streaming.EventStreams.streamingSession(spark)
-    ss.conf.set("spark.sql.catalog.graftmem",
-      classOf[graft.sources.v2.MemCatalog].getName)
-    ss.sql("DROP TABLE IF EXISTS graftmem.tmp.sink_seq")
-    ss.sql("CREATE TABLE graftmem.tmp.sink_seq (id BIGINT, val BIGINT, bucket BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-memsink-ckpt")
-    val q = ss.readStream.format("graft.sources.v2.SeqStreamSource")
-      .option("n", "40000").option("step", "10000").option("parts", "4").load()
-      .writeStream.option("checkpointLocation", ckpt.toString)
-      .toTable("graftmem.tmp.sink_seq")
-    try q.processAllAvailable() finally q.stop()
-    val out = ss.sql(
-      """SELECT bucket, count(*) AS n_rows, sum(val) AS sum_val
-        |FROM graftmem.tmp.sink_seq GROUP BY bucket""".stripMargin)
-      .localCheckpoint(true)
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(ckpt)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
-    out
-  }
+  def dsv2StreamSink(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "memsink", extraConf = MemCatalogConf) { s =>
+      val ss = s.session
+      ss.sql("DROP TABLE IF EXISTS graftmem.tmp.sink_seq")
+      ss.sql("CREATE TABLE graftmem.tmp.sink_seq (id BIGINT, val BIGINT, bucket BIGINT)")
+      s.drain(ss.readStream.format("graft.sources.v2.SeqStreamSource")
+        .option("n", "40000").option("step", "10000").option("parts", "4").load()
+        .writeStream, Some("graftmem.tmp.sink_seq"))
+      ss.sql(
+        """SELECT bucket, count(*) AS n_rows, sum(val) AS sum_val
+          |FROM graftmem.tmp.sink_seq GROUP BY bucket""".stripMargin)
+        .localCheckpoint(true)
+    }
 
   /** Export path for the custom V2 WRITE connector round-trip. */
   val AuditSinkPath = "/root/repo/spark-warehouse/graft_audit_sink/orders_audit"
@@ -4458,13 +4263,7 @@ object Formats {
     // location — clear both catalog entry and location first
     Seq("graft_bkt_orders", "graft_bkt_lineitem").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(loc)
-      }
+      graft.sources.v2.MemCatalog.deleteRecursively(java.nio.file.Paths.get(s"spark-warehouse/$t"))
     }
     Sinks.writeBucketedTable(
       Tables.orders(spark, dir).select("o_orderkey", "o_orderpriority"),
@@ -4610,17 +4409,9 @@ object Formats {
         sum(col("h")).as("checksum"))
     // pin before deleting the temp layouts (Verify/Bench re-execute the plan)
     val pinned = audit.localCheckpoint(true)
-    deleteTree(small)
-    deleteTree(big)
+    graft.sources.v2.MemCatalog.deleteRecursively(small)
+    graft.sources.v2.MemCatalog.deleteRecursively(big)
     pinned
-  }
-
-  private def deleteTree(path: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(path)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-    finally walk.close()
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -846,9 +846,12 @@ object MemCatalog {
     case other => other
   }
 
+  /** Deletes `p` and everything under it. Symlinks are removed as links,
+    * never followed: stream source dirs link to fixture parquet.
+    */
   def deleteRecursively(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
+    if (Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.deleteIfExists(_))

@@ -77,7 +77,10 @@ object EventStreams {
     * so the oracle is the 4-way slide replay in SQL.
     */
   def slidingFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "sliding", 1, OutputMode.Complete())(slidingCounts)
+    BoundedStream.run(spark, "sliding") { s =>
+      s.drain(s.memory(slidingCounts(s.link(s"$dir/events.parquet", 1)), OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** Streaming twin of the reference's flagship word count: incremental
     * per-word running totals over a document stream (update mode). The
@@ -91,161 +94,6 @@ object EventStreams {
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
-  /** Shared harness for the ORACLE-VERIFIED bounded streaming runs: links
-    * the fixture parquet `copies` times into a fresh monitored directory (a
-    * file stream source monitors a DIRECTORY; >1 copy is the file-source
-    * equivalent of at-least-once redelivery), runs `build(stream)` to a
-    * memory sink, drains with `processAllAvailable`, then MATERIALIZES the
-    * sink table off the view (`localCheckpoint`) so the temp view, the
-    * checkpoint dir, and the source dir can all be torn down before
-    * returning — repeated invocations leak nothing.
-    * `maxFilesPerTrigger=1` makes multi-copy runs deterministically
-    * multi-batch, so redelivery crosses a real batch boundary.
-    */
-  private def runBoundedFileSource(spark: SparkSession, dir: String,
-      tag: String, copies: Int, mode: OutputMode, table: String = "events",
-      partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val src = s"$dir/$table.parquet"
-    val rawSchema = spark.read.parquet(src).schema
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-src")
-    (1 to copies).foreach { i =>
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve(s"${table}_copy$i.parquet"), java.nio.file.Path.of(src))
-    }
-    runStreamOnDir(spark, srcDir, tag, mode, rawSchema, partitions, extraConf)(build)
-  }
-
-  /** Inner runner over a PREPARED source directory (the file set and their
-    * modification times define the micro-batch schedule under
-    * `maxFilesPerTrigger=1` — oldest mtime first). Tears down the source
-    * dir, checkpoint, and memory-sink view before returning.
-    */
-  private def runStreamOnDir(spark: SparkSession, srcDir: java.nio.file.Path,
-      tag: String, mode: OutputMode,
-      rawSchema: org.apache.spark.sql.types.StructType,
-      partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val ss = streamingSession(spark, partitions, extraConf)
-    val dbg = sys.env.contains("GRAFT_STREAM_PHASE_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(p: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      System.err.println(f"[phase] $tag $p ${(t - t0) / 1e9}%.3f")
-      t0 = t
-    }
-    val qname = s"graft_stream_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    // Append-mode gates sink to PARQUET and read back distributed (guide
-    // §5: the driver does no data work) — the memory sink collects every
-    // output row onto the driver per batch, which is the one
-    // driver-in-the-data-path posture a 100 TB stream cannot keep. The
-    // file sink's per-batch commit rides the same checkpoint machinery,
-    // and the read-back pins the result into distributed block storage so
-    // the sink dir tears down with the rest. Complete/Update gates keep
-    // the memory sink (the file sink is append-only by contract).
-    val isAppend = mode == OutputMode.Append()
-    val outDir =
-      if (isAppend) Some(java.nio.file.Files.createTempDirectory(s"graft-sink-$tag"))
-      else None
-    try {
-      val stream0 = ss.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      mark("setup")
-      // normalize any fixture ts encoding (nanos-long, TIMESTAMP_NTZ) to
-      // plain TimestampType BEFORE watermarks — streaming event-time
-      // requires TimestampType, and the session zone is pinned UTC so the
-      // NTZ cast matches the oracle's naive-epoch reading
-      val stream = graft.sources.Tables.normalizeTs(stream0)
-      val built = build(stream)
-      val writer = built.writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-      val q = outDir match {
-        case Some(d) => writer.format("parquet").option("path", d.toString).start()
-        case None => writer.format("memory").queryName(qname).start()
-      }
-      mark("start")
-      try {
-        q.processAllAvailable(); mark("drain")
-        // per-batch duration breakdown (addBatch = plan+execute, commitOffsets
-        // = checkpoint WAL, stateStore commit rides addBatch) — the drain
-        // phase above is opaque without it
-        if (dbg) q.recentProgress.foreach(p => System.err.println(
-          s"[phase] $tag batch ${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
-      } finally q.stop()
-      mark("stop")
-      // pin the result into block-manager storage, then tear everything down
-      val out = outDir match {
-        case Some(d) =>
-          // explicit schema: a zero-row sink has a metadata log but no
-          // footer to infer from
-          ss.read.schema(built.schema).parquet(d.toString).localCheckpoint(true)
-        case None =>
-          val t = ss.table(qname).localCheckpoint(true)
-          ss.catalog.dropTempView(qname)
-          t
-      }
-      mark("pin")
-      out
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      outDir.foreach(deleteRecursively)
-    }
-  }
-
-  /** Per-run session CLONE (`newSession`: isolated SQLConf over the shared
-    * SparkContext) for every bounded streaming run. Two reasons:
-    * (1) isolation — Verify drives queries concurrently on one session, so
-    * per-query toggling of session-global keys races (a concurrent
-    * restore could flip a restart query's second incarnation to another
-    * state-store provider mid-recovery); the RocksDB provider is pinned
-    * in [[graft.Sessions]] builder options, which `newSession` inherits.
-    * (2) state-store sizing — a streaming aggregation opens one state
-    * store PER shuffle partition, frozen into the checkpoint at first
-    * start; 32 RocksDB instances × init/commit dominated fixture-scale
-    * wall time (7 s runs measured in r6) while 8 keeps the identical
-    * partitioned-state posture at a quarter the fixed cost. At 100 TB
-    * this knob goes UP (sized to the stream's key volume); a per-query
-    * clone is where that sizing belongs either way.
-    */
-  private[graft] def streamingSession(spark: SparkSession,
-      partitions: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val ss = spark.newSession()
-    extraConf.foreach { case (k, v) => ss.conf.set(k, v) }
-    val n = partitions.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    ss.conf.set("spark.sql.shuffle.partitions", n)
-    // scan-side floor to match: the batch sessions force minPartitionNum=32
-    // to widen explosive map stages, but a micro-batch reads ONE file here
-    ss.conf.set("spark.sql.files.minPartitionNum", n)
-    // per-batch changelog uploads instead of full RocksDB snapshot uploads
-    // — the production checkpoint posture for high-frequency triggers, and
-    // it removes the snapshot cost from every fixture micro-batch
-    ss.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    // MEASURED NEGATIVE (r14, do not re-try):
-    // `rocksdb.trackTotalNumberOfRows=false` — the documented "first knob
-    // for put-heavy state" — made the stream-stream outer join 2.3× SLOWER
-    // here (5.56 → 13.0 s, 5-run medians, reproduced in both A/B orders)
-    // and nudged the dedup run up too (2.2 → 2.8 s). The row-count
-    // bookkeeping it skips is evidently on a path the join provider relies
-    // on; the default (true) stays.
-    ss
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
-
   /** ORACLE-VERIFIED streaming run: the tumbling-window aggregation executed
     * as a REAL bounded Structured Streaming query — file source over the
     * fixture parquet, complete-mode memory sink, drained with
@@ -257,7 +105,10 @@ object EventStreams {
     * drops nothing because the final complete-mode state includes all rows.)
     */
   def tumblingFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "tumbling", 1, OutputMode.Complete())(tumblingCounts)
+    BoundedStream.run(spark, "tumbling") { s =>
+      s.drain(s.memory(tumblingCounts(s.link(s"$dir/events.parquet", 1)), OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** Streaming exact dedup — the at-least-once ingestion guard: duplicate
     * event ids arriving within the watermark horizon are dropped.
@@ -280,12 +131,21 @@ object EventStreams {
     * equivalent of at-least-once redelivery), so the dedup state is doing
     * real work: every event arrives at least twice and must emit exactly
     * once. Append mode — `dropDuplicatesWithinWatermark` emits first-seen
-    * rows immediately (no window finalization wait), the memory-sink table
-    * is the emitted stream, and the oracle is simply the distinct fixture.
+    * rows immediately (no window finalization wait) into a PARQUET
+    * DIRECTORY sink whose file commits are recorded in `_spark_metadata`
+    * by the same checkpointed transaction as the state update, so replays
+    * never double-write; the committed files read back are the emitted
+    * stream, and the oracle is simply the distinct fixture. The registry
+    * runs it twice: `streaming_dedup_filesrc`, and `streaming_sink_parquet`
+    * for the exactly-once file-sink leg every production streaming
+    * pipeline ends in.
     */
   def dedupFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "dedup", 2, OutputMode.Append()) { stream =>
-      dedupStream(stream).select("event_id", "user_id", "event_type", "value")
+    BoundedStream.run(spark, "dedup") { s =>
+      val out = dedupStream(s.link(s"$dir/events.parquet", 2))
+        .select("event_id", "user_id", "event_type", "value")
+      s.drain(s.parquet(out))
+      s.parquetRows(out.schema)
     }
 
   /** ORACLE-VERIFIED watermark LATE-DATA semantics — the streaming behavior
@@ -318,47 +178,20 @@ object EventStreams {
     * final unfinished hour), never ∝ stream history.
     */
   def lateDataFileSource(spark: SparkSession, dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val tsCol = graft.sources.Tables
       .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
     val tmax = probeMaxTs(spark, dir)
     val lateCut = Timestamp.from(tmax.toInstant.minus(java.time.Duration.ofDays(1)))
     val isStraggler = col("event_id") % 7 === 0 && tsCol < lit(lateCut)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-late")
-    def dump(df: DataFrame, name: String, ageSec: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-late-part")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.toString.endsWith(".parquet")).get
-      val dest = srcDir.resolve(name)
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageSec * 1000))
-      deleteRecursively(tmp)
+    BoundedStream.run(spark, "late") { s =>
+      s.write(raw.filter(!isStraggler && tsCol < lit(tmax)), "a_bulk.parquet", 300)
+      s.write(raw.filter(tsCol === lit(tmax)), "b_advance.parquet", 150)
+      s.write(raw.filter(isStraggler), "c_stragglers.parquet", 0)
+      val out = tumblingCounts(s.files(raw.schema))
+      s.drain(s.parquet(out))
+      s.parquetRows(out.schema)
     }
-    dump(raw.filter(!isStraggler && tsCol < lit(tmax)), "a_bulk.parquet", 300)
-    dump(raw.filter(tsCol === lit(tmax)), "b_advance.parquet", 150)
-    dump(raw.filter(isStraggler), "c_stragglers.parquet", 0)
-    runStreamOnDir(spark, srcDir, "late", OutputMode.Append(), raw.schema)(tumblingCounts)
-  }
-
-  /** Write `df` as ONE parquet file named `name` into `srcDir`, with its
-    * mtime backdated `ageSec` seconds — file order (oldest first) is the
-    * micro-batch schedule under `maxFilesPerTrigger=1`.
-    */
-  private def dumpOneFile(srcDir: java.nio.file.Path)(
-      df: DataFrame, name: String, ageSec: Long): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dump-part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = java.nio.file.Files.list(tmp).iterator().asScala
-      .find(_.toString.endsWith(".parquet")).get
-    val dest = srcDir.resolve(name)
-    java.nio.file.Files.move(part, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageSec * 1000))
-    deleteRecursively(tmp)
   }
 
   /** ORACLE-VERIFIED streaming CDC apply — the `foreachBatch` MERGE sink:
@@ -380,31 +213,25 @@ object EventStreams {
     * table and the anti-join+union becomes a real MERGE on the bucket
     * key; the per-batch algebra is identical.
     */
-  def cdcMergeFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val o = ss.read.parquet(s"$dir/orders.parquet")
-      .select(col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val ins = o.select(col("o_orderkey"), lit(1).as("version"), lit("I").as("op"), col("cents"))
-    val upd = o.filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), lit(2).as("version"), lit("U").as("op"),
-        (col("cents") + 1000L).as("cents"))
-    val del = o.filter(col("o_orderkey") % 13 === 0)
-      .select(col("o_orderkey"), lit(3).as("version"), lit("D").as("op"),
-        lit(null).cast("long").as("cents"))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-cdc")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-cdc")
-    try {
-      dumpOneFile(srcDir)(ins, "a_v1_inserts.parquet", 300)
-      dumpOneFile(srcDir)(upd, "b_v2_updates.parquet", 150)
-      dumpOneFile(srcDir)(del, "c_v3_deletes.parquet", 0)
-      val schema = ins.schema
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+  def cdcMergeFileSource(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "cdc") { s =>
+      val ss = s.session
+      val o = ss.read.parquet(s"$dir/orders.parquet")
+        .select(col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
+      val ins = o.select(col("o_orderkey"), lit(1).as("version"), lit("I").as("op"), col("cents"))
+      val upd = o.filter(col("o_orderkey") % 7 === 0)
+        .select(col("o_orderkey"), lit(2).as("version"), lit("U").as("op"),
+          (col("cents") + 1000L).as("cents"))
+      val del = o.filter(col("o_orderkey") % 13 === 0)
+        .select(col("o_orderkey"), lit(3).as("version"), lit("D").as("op"),
+          lit(null).cast("long").as("cents"))
+      s.write(ins, "a_v1_inserts.parquet", 300)
+      s.write(upd, "b_v2_updates.parquet", 150)
+      s.write(del, "c_v3_deletes.parquet", 0)
       var state: DataFrame =
-        ss.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      val q = stream.writeStream
+        ss.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), ins.schema)
+      s.drain(s.files(ins.schema).writeStream
         .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           val latest = batch.groupBy("o_orderkey").agg(
             max("version").as("version"),
@@ -416,15 +243,9 @@ object EventStreams {
             .union(latest)
             .localCheckpoint(true)
           ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
       state.filter(col("op") =!= "D").select("o_orderkey", "version", "cents")
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
     }
-  }
 
   /** ORACLE-VERIFIED stream-stream join run: [[clickPurchaseJoin]] — a real
     * user's first nontrivial streaming query — executed as a bounded
@@ -441,9 +262,12 @@ object EventStreams {
     // fixture-scale RocksDB bring-up; at 100 TB this knob goes UP. Join
     // state format v3 folds the 4 stores into one per partition (measured
     // 0.55-0.77× on the outer-join gates; see sentinelOuterRun).
-    runBoundedFileSource(spark, dir, "join", 1, OutputMode.Append(),
-      partitions = Some("4"),
-      extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3"))(clickPurchaseJoin)
+    BoundedStream.run(spark, "join", partitions = 4,
+        extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3")) { s =>
+      val out = clickPurchaseJoin(s.link(s"$dir/events.parquet", 1))
+      s.drain(s.parquet(out))
+      s.parquetRows(out.schema)
+    }
 
   /** Native session-window aggregation for streams: per-user sessions
     * closed by 30 min inactivity, watermark bounds the merge state — the
@@ -465,7 +289,11 @@ object EventStreams {
     * one stateful shape tumbling/dedup/join runs don't cover.
     */
   def sessionFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "session", 1, OutputMode.Complete())(sessionWindowCounts)
+    BoundedStream.run(spark, "session") { s =>
+      s.drain(s.memory(sessionWindowCounts(s.link(s"$dir/events.parquet", 1)),
+        OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** DYNAMIC-gap streaming sessions: the timeout is a per-event expression
     * (purchase 1 h, error 5 min, else 30 min — the batch
@@ -495,7 +323,11 @@ object EventStreams {
     * must equal the batch interval-union islanding oracle exactly.
     */
   def sessionDynamicFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "sessdyn", 1, OutputMode.Complete())(sessionDynamicCounts)
+    BoundedStream.run(spark, "sessdyn") { s =>
+      s.drain(s.memory(sessionDynamicCounts(s.link(s"$dir/events.parquet", 1)),
+        OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** ORACLE-VERIFIED streaming flagship: the reference's own word count
     * ([[streamingWordCount]]) as a bounded document stream in complete
@@ -504,8 +336,11 @@ object EventStreams {
     * batch/stream/oracle triangle on the flagship query itself.
     */
   def wordCountFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "wc", 1, OutputMode.Complete(), table = "documents")(
-      streamingWordCount)
+    BoundedStream.run(spark, "wc") { s =>
+      s.drain(s.memory(streamingWordCount(s.link(s"$dir/documents.parquet", 1)),
+        OutputMode.Complete()))
+      s.memoryRows
+    }
 
   /** Streaming TOP-K — the reference's interactive top-N as an incremental
     * query: complete-mode aggregation with `orderBy`+`limit` (legal ONLY in
@@ -515,49 +350,11 @@ object EventStreams {
     * triangle closed on the reference's second query shape.
     */
   def topkFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "topk", 1, OutputMode.Complete(), table = "documents")(
-      docs => streamingWordCount(docs).orderBy(col("cnt").desc, col("word").asc).limit(20))
-
-  /** ORACLE-VERIFIED streaming FILE SINK — the exactly-once ETL shape: the
-    * deduped stream is written to a PARQUET DIRECTORY sink (file commits
-    * recorded in `_spark_metadata` by the same checkpointed transaction as
-    * the state update, so replays never double-write), then the committed
-    * files are read back as the verified result. Same oracle as
-    * `streaming_dedup_filesrc` (the distinct fixture) — what's new under
-    * test is the transactional file-output leg every production streaming
-    * pipeline ends in, instead of the in-memory sink.
-    */
-  def dedupToParquetSink(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val src = s"$dir/events.parquet"
-    val rawSchema = ss.read.parquet(src).schema
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-psink-ckpt")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-psink-src")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-psink-out")
-    try {
-      (1 to 2).foreach { i =>
-        java.nio.file.Files.createSymbolicLink(
-          srcDir.resolve(s"events_copy$i.parquet"), java.nio.file.Path.of(src))
-      }
-      val stream0 = ss.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val stream = graft.sources.Tables.normalizeTs(stream0)
-      val q = dedupStream(stream)
-        .select("event_id", "user_id", "event_type", "value")
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", outDir.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // read back through _spark_metadata (only COMMITTED files are listed),
-      // pin the rows, then tear the temp dirs down
-      ss.read.parquet(outDir.toString).localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
+    BoundedStream.run(spark, "topk") { s =>
+      s.drain(s.memory(streamingWordCount(s.link(s"$dir/documents.parquet", 1))
+        .orderBy(col("cnt").desc, col("word").asc).limit(20), OutputMode.Complete()))
+      s.memoryRows
     }
-  }
 
   /** ORACLE-VERIFIED `Trigger.AvailableNow` run — the SELF-TERMINATING
     * catch-up trigger that production scheduled streaming jobs use (each
@@ -575,35 +372,18 @@ object EventStreams {
     * whatever landed since the last one, with streaming exactly-once
     * semantics but batch-shaped resource usage.
     */
-  def availableNowFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val raw = ss.read.parquet(s"$dir/events.parquet")
-    val mid = probeMidId(ss, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-avnow-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-avnow-ckpt")
-    val qname = s"graft_stream_avnow_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try {
-      dumpOneFile(srcDir)(raw.filter(col("event_id") < mid), "a_first_half.parquet", 300)
-      dumpOneFile(srcDir)(raw.filter(col("event_id") >= mid), "b_second_half.parquet", 0)
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = tumblingCounts(stream)
-        .writeStream.outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName(qname).start()
-      // no stop() and no processAllAvailable(): AvailableNow must end the
-      // query on its own once both admitted batches have committed
-      q.awaitTermination()
-      val out = ss.table(qname).localCheckpoint(true)
-      ss.catalog.dropTempView(qname)
-      out
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
+  def availableNowFileSource(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "avnow") { s =>
+      val raw = s.session.read.parquet(s"$dir/events.parquet")
+      val mid = probeMidId(s.session, dir)
+      s.write(raw.filter(col("event_id") < mid), "a_first_half.parquet", 300)
+      s.write(raw.filter(col("event_id") >= mid), "b_second_half.parquet", 0)
+      // AvailableNow must end the query on its own once both admitted
+      // batches have committed
+      s.awaitEnd(s.memory(tumblingCounts(s.files(raw.schema)), OutputMode.Complete())
+        .trigger(Trigger.AvailableNow()))
+      s.memoryRows
     }
-  }
 
   /** ORACLE-VERIFIED RESTART-RESUME run — the data-plane twin of the
     * reference's failure-recovery machinery (worker death → task
@@ -620,36 +400,17 @@ object EventStreams {
     * the end-to-end exactly-once-across-restart contract every production
     * pipeline relies on, under the correctness gate.
     */
-  def restartResumeFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val raw = ss.read.parquet(s"$dir/events.parquet")
-    val mid = probeMidId(ss, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-restart-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-restart-out")
-    def incarnation(): Unit = {
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = stream.select("event_id", "user_id", "event_type", "value")
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", outDir.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+  def restartResumeFileSource(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "restart") { s =>
+      val raw = s.session.read.parquet(s"$dir/events.parquet")
+      val mid = probeMidId(s.session, dir)
+      val out = s.files(raw.schema).select("event_id", "user_id", "event_type", "value")
+      s.write(raw.filter(col("event_id") < mid), "a_first_half.parquet", 300)
+      s.drain(s.parquet(out)) // phase 1: ingest the first half, then "fail"
+      s.write(raw.filter(col("event_id") >= mid), "b_second_half.parquet", 0)
+      s.drain(s.parquet(out)) // phase 2: recover and ingest ONLY the new file
+      s.parquetRows(out.schema)
     }
-    try {
-      dumpOneFile(srcDir)(raw.filter(col("event_id") < mid), "a_first_half.parquet", 300)
-      incarnation() // phase 1: ingest the first half, then "fail"
-      dumpOneFile(srcDir)(raw.filter(col("event_id") >= mid), "b_second_half.parquet", 0)
-      incarnation() // phase 2: recover and ingest ONLY the new file
-      ss.read.parquet(outDir.toString).localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
-    }
-  }
 
   /** ORACLE-VERIFIED STATEFUL restart-recovery run — the state-store twin
     * of [[restartResumeFileSource]] (which proves source/sink recovery on
@@ -667,38 +428,19 @@ object EventStreams {
     * this is precisely the changelog-checkpoint restore path a 100 TB
     * stream relies on after an executor or driver loss.
     */
-  def restartStatefulFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val raw = ss.read.parquet(s"$dir/events.parquet")
-    val tsCol = graft.sources.Tables
-      .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
-    val tmax = probeMaxTs(ss, dir)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-rstate-src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rstate-ckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-rstate-out")
-    def incarnation(): Unit = {
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = tumblingCounts(stream)
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .format("parquet").option("path", outDir.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+  def restartStatefulFileSource(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "rstate") { s =>
+      val raw = s.session.read.parquet(s"$dir/events.parquet")
+      val tsCol = graft.sources.Tables
+        .normalizeTsExpr(raw.schema("ts").dataType).getOrElse(col("ts"))
+      val tmax = probeMaxTs(s.session, dir)
+      val out = tumblingCounts(s.files(raw.schema))
+      s.write(raw.filter(tsCol < lit(tmax)), "a_bulk.parquet", 300)
+      s.drain(s.parquet(out)) // build window state, then "fail"
+      s.write(raw.filter(tsCol === lit(tmax)), "b_advance.parquet", 0)
+      s.drain(s.parquet(out)) // recover state, advance watermark, finalize windows
+      s.parquetRows(out.schema)
     }
-    try {
-      dumpOneFile(srcDir)(raw.filter(tsCol < lit(tmax)), "a_bulk.parquet", 300)
-      incarnation() // build window state, then "fail"
-      dumpOneFile(srcDir)(raw.filter(tsCol === lit(tmax)), "b_advance.parquet", 0)
-      incarnation() // recover state, advance watermark, finalize windows
-      ss.read.parquet(outDir.toString).localCheckpoint(true)
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
-      deleteRecursively(outDir)
-    }
-  }
 
   /** Stream-static enrichment: the event stream joined to a STATIC batch
     * dimension (customer segments). No state store is involved — the
@@ -719,9 +461,11 @@ object EventStreams {
     * `streaming_join_filesrc`).
     */
   def enrichFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "enrich", 1, OutputMode.Complete()) { stream =>
-      enrichStream(stream,
-        graft.sources.Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"))
+    BoundedStream.run(spark, "enrich") { s =>
+      s.drain(s.memory(enrichStream(s.link(s"$dir/events.parquet", 1),
+        graft.sources.Tables.customer(spark, dir).select("c_custkey", "c_mktsegment")),
+        OutputMode.Complete()))
+      s.memoryRows
     }
 
   /** Stream-stream inner join: each purchase matched to the same user's
@@ -797,7 +541,7 @@ object EventStreams {
     */
   def outerJoinFileSource(spark: SparkSession, dir: String): DataFrame =
     sentinelOuterRun(spark, dir, "outerjoin")(clickPurchaseOuterJoin)
-      .filter(col("purchase_id") > 0)
+      .filter(col("purchase_id") >= 0)
 
   /** Stream-stream FULL OUTER join — both unmatched classes at once:
     * click-less purchases AND purchase-less clicks, each null-extended on
@@ -828,8 +572,8 @@ object EventStreams {
 
   def fullOuterJoinFileSource(spark: SparkSession, dir: String): DataFrame =
     sentinelOuterRun(spark, dir, "fullouter")(clickPurchaseFullOuterJoin)
-      .filter((col("purchase_id").isNull || col("purchase_id") > 0) &&
-        (col("click_id").isNull || col("click_id") > 0))
+      .filter((col("purchase_id").isNull || col("purchase_id") >= 0) &&
+        (col("click_id").isNull || col("click_id") >= 0))
 
   /** Shared harness for the outer-join runs: fixture events as batch 0,
     * then TWO far-future sentinel batches (one row per join side each) —
@@ -841,32 +585,10 @@ object EventStreams {
   private def sentinelOuterRun(spark: SparkSession, dir: String, tag: String)(
       build: DataFrame => DataFrame): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = java.nio.file.Files.createTempDirectory(s"graft-stream-$tag")
-    val bump: Column => Column = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        c => c + lit(2L * 86400L * 1000000000L) // nanos-long fixture encoding
-      case _ => c => c + expr("INTERVAL 2 DAYS") // timestamp / ntz
-    }
-    def sentinels(ids: (Long, Long)): DataFrame =
-      raw.agg(max(col("ts")).as("mts")).select(explode(array(
-          struct(lit(ids._1).as("event_id"), bump(col("mts")).as("ts"),
-            lit(999991L).as("user_id"), lit("click").as("event_type"),
-            lit(0.0).as("value"), lit("").as("props")),
-          struct(lit(ids._2).as("event_id"), bump(col("mts")).as("ts"),
-            lit(999992L).as("user_id"), lit("purchase").as("event_type"),
-            lit(0.0).as("value"), lit("").as("props")))).as("s"))
-        .select("s.*")
-    dumpOneFile(srcDir)(raw, "a_events.parquet", 300)
-    // two sentinel batches: the first ADVANCES the watermark (recorded at
-    // its batch end), the second is the data batch that EXECUTES under it
-    // and flushes the remaining unmatched-left state (the late_data
-    // lesson: eviction is batch-boundary-granular and data-batch-driven)
-    dumpOneFile(srcDir)(sentinels((-1L, -2L)), "b_sentinels.parquet", 60)
-    dumpOneFile(srcDir)(sentinels((-3L, -4L)), "c_sentinels.parquet", 0)
     // MEASURED PITFALL: the sentinel exclusion must live HERE, on the
-    // drained batch table — a `purchase_id > 0` filter inside the
+    // drained batch table — a `purchase_id >= 0` filter inside the
     // streaming plan is pushed through the left-outer join into the
-    // purchases-side SCAN (PushedFilters: GreaterThan(event_id,0)), which
+    // purchases-side SCAN (PushedFilters: GreaterThanOrEqual(event_id,0)), which
     // deletes the purchase-side sentinel before its EventTimeWatermark
     // node ever sees it: that side's max never advances, the min-policy
     // query watermark stalls, and the trailing unmatched purchases
@@ -879,9 +601,40 @@ object EventStreams {
     // cut in per-batch open/commit/changelog fixed cost at any partition
     // count (the checkpoint is created fresh per run, so no compatibility
     // constraint applies).
-    runStreamOnDir(spark, srcDir, tag, OutputMode.Append(), raw.schema,
-      partitions = Some("4"),
-      extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3"))(build)
+    BoundedStream.run(spark, tag, partitions = 4,
+        extraConf = Map("spark.sql.streaming.join.stateFormatVersion" -> "3")) { s =>
+      s.write(raw, "a_events.parquet", 300)
+      // two sentinel batches: the first ADVANCES the watermark (recorded at
+      // its batch end), the second is the data batch that EXECUTES under it
+      // and flushes the remaining unmatched-left state (the late_data
+      // lesson: eviction is batch-boundary-granular and data-batch-driven)
+      s.write(sentinels(raw, Seq((-1L, 999991L, "click"), (-2L, 999992L, "purchase"))),
+        "b_sentinels.parquet", 60)
+      s.write(sentinels(raw, Seq((-3L, 999991L, "click"), (-4L, 999992L, "purchase"))),
+        "c_sentinels.parquet", 0)
+      val out = build(s.files(raw.schema))
+      s.drain(s.parquet(out))
+      s.parquetRows(out.schema)
+    }
+  }
+
+  /** Far-future sentinel events, one per `(event_id, user_id, event_type)`,
+    * stamped two days past the fixture's max `ts` in the fixture's own ts
+    * encoding. A sentinel batch pushes the watermark past every real event,
+    * so the state that only eviction emits (outer-join nulls, timer
+    * flushes) drains; callers drop the sentinels (negative event ids) from
+    * the drained table.
+    */
+  private def sentinels(raw: DataFrame, rows: Seq[(Long, Long, String)]): DataFrame = {
+    val bump: Column => Column = raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        c => c + lit(2L * 86400L * 1000000000L) // nanos-long fixture encoding
+      case _ => c => c + expr("INTERVAL 2 DAYS") // timestamp / ntz
+    }
+    raw.agg(max(col("ts")).as("mts")).select(explode(array(rows.map { case (id, user, kind) =>
+      struct(lit(id).as("event_id"), bump(col("mts")).as("ts"), lit(user).as("user_id"),
+        lit(kind).as("event_type"), lit(0.0).as("value"), lit("").as("props"))
+    }: _*)).as("s")).select("s.*")
   }
 
   /** SKETCH-TYPED STREAMING STATE: the native log-histogram quantile
@@ -907,11 +660,12 @@ object EventStreams {
     // the doubled-corpus oracle if batch 1's state-store sketch survives
     // serialization and MERGES with batch 2's partials (counters add —
     // duplicate-sensitive, so redelivery would be visible, unlike HLL)
-    val drained = runBoundedFileSource(spark, dir, "sketch", 2, OutputMode.Complete()) {
-      stream =>
-        graft.plans.LogHistQuantiles.register(stream.sparkSession)
-        stream.select(round(col("value") * 100).cast("long").as("cents"))
-          .agg(expr("loghist_sketch(cents)").as("sk"))
+    val drained = BoundedStream.run(spark, "sketch") { s =>
+      val stream = s.link(s"$dir/events.parquet", 2)
+      graft.plans.LogHistQuantiles.register(s.session)
+      s.drain(s.memory(stream.select(round(col("value") * 100).cast("long").as("cents"))
+        .agg(expr("loghist_sketch(cents)").as("sk")), OutputMode.Complete()))
+      s.memoryRows
     }
     val merged = drained.select(posexplode(col("sk")).as(Seq("pos", "cnt")))
       .filter(col("cnt") > 0)
@@ -955,29 +709,31 @@ object EventStreams {
     */
   def nearDupFileSource(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    runBoundedFileSource(spark, dir, "neardup", 2, OutputMode.Complete(), table = "documents") {
-      stream =>
-        val corpus = graft.sources.Tables.documents(stream.sparkSession, dir)
-          .filter(col("doc_id") % 10 =!= 7)
-        val corpusBands = Dedup.bandRows(Dedup.minhashSignatures(corpus))
-          .select(col("doc_id").as("corpus_id"), col("band"), col("band_sig"))
-        val mCols = (0 until Dedup.MinhashK).map(i => expr(
-          s"array_min(transform(b32s, b -> (b * ${Dedup.MinhashA(i)}L + ${Dedup.MinhashC(i)}L) % ${Dedup.MinhashP}L))")
-          .as(s"m$i"))
-        val incomingSig = stream
-          .filter(col("doc_id") % 10 === 7)
-          .select(col("doc_id").cast("long").as("doc_id"),
-            split(trim(col("text")), "\\s+").as("words"))
-          .filter(size(col("words")) >= 5)
-          .withColumn("shs", expr(
-            "transform(sequence(0, size(words) - 5), i -> array_join(slice(words, i + 1, 5), ' '))"))
-          .withColumn("b32s", expr(
-            "transform(shs, s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"))
-          .select(col("doc_id") +: mCols: _*)
-        Dedup.bandRows(incomingSig)
-          .join(broadcast(corpusBands), Seq("band", "band_sig"))
-          .groupBy("doc_id")
-          .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_band_matches"))
+    BoundedStream.run(spark, "neardup") { s =>
+      val stream = s.link(s"$dir/documents.parquet", 2)
+      val corpus = graft.sources.Tables.documents(s.session, dir)
+        .filter(col("doc_id") % 10 =!= 7)
+      val corpusBands = Dedup.bandRows(Dedup.minhashSignatures(corpus))
+        .select(col("doc_id").as("corpus_id"), col("band"), col("band_sig"))
+      val mCols = (0 until Dedup.MinhashK).map(i => expr(
+        s"array_min(transform(b32s, b -> (b * ${Dedup.MinhashA(i)}L + ${Dedup.MinhashC(i)}L) % ${Dedup.MinhashP}L))")
+        .as(s"m$i"))
+      val incomingSig = stream
+        .filter(col("doc_id") % 10 === 7)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          split(trim(col("text")), "\\s+").as("words"))
+        .filter(size(col("words")) >= 5)
+        .withColumn("shs", expr(
+          "transform(sequence(0, size(words) - 5), i -> array_join(slice(words, i + 1, 5), ' '))"))
+        .withColumn("b32s", expr(
+          "transform(shs, s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))"))
+        .select(col("doc_id") +: mCols: _*)
+      s.drain(s.memory(Dedup.bandRows(incomingSig)
+        .join(broadcast(corpusBands), Seq("band", "band_sig"))
+        .groupBy("doc_id")
+        .agg(size(collect_set(col("corpus_id"))).cast("long").as("n_band_matches")),
+        OutputMode.Complete()))
+      s.memoryRows
     }
   }
 
@@ -1070,54 +826,33 @@ object EventStreams {
     * for TELEMETRY). Reads `q.recentProgress` synchronously after
     * `processAllAvailable` — no listener race.
     */
-  def observeFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val ss = streamingSession(spark)
-    val src = s"$dir/events.parquet"
-    val rawSchema = ss.read.parquet(src).schema
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-obs")
-    (1 to 2).foreach { i =>
-      java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve(s"events_copy$i.parquet"), java.nio.file.Path.of(src))
-    }
-    val qname = s"graft_stream_obs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-obs-ckpt")
-    try {
-      val stream = graft.sources.Tables.normalizeTs(
-        ss.readStream.schema(rawSchema).option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      val q = stream
+  def observeFileSource(spark: SparkSession, dir: String): DataFrame =
+    BoundedStream.run(spark, "obs") { s =>
+      val counts = s.link(s"$dir/events.parquet", 2)
         .observe("graft_obs",
           count(lit(1)).as("rows_seen"),
           sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents_seen"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt.toString)
-        .format("memory").queryName(qname).start()
-      try q.processAllAvailable() finally q.stop()
       // sum observed metrics across all micro-batches (synchronous read)
       var rowsSeen = 0L
       var centsSeen = 0L
-      q.recentProgress.foreach { p =>
+      s.drain(s.memory(counts, OutputMode.Complete())).foreach { p =>
         val m = p.observedMetrics.get("graft_obs")
         if (m != null) {
           rowsSeen += m.getAs[Long]("rows_seen")
           centsSeen += m.getAs[Long]("cents_seen")
         }
       }
-      val table = ss.table(qname).localCheckpoint(true)
-      ss.catalog.dropTempView(qname)
-      import ss.implicits._
+      val table = s.memoryRows
+      import s.session.implicits._
       // the fixture streamed TWICE (2 symlinked copies) — halve to the
       // per-copy totals the oracle states from the batch table
       Seq((rowsSeen / 2, centsSeen / 2)).toDF("rows_seen", "cents_seen")
         .crossJoin(broadcast(
           table.agg(count(lit(1)).as("n_types"),
             (sum("n_events") / 2).cast("long").as("n_rows_table"))))
-    } finally {
-      deleteRecursively(ckpt)
-      deleteRecursively(srcDir)
     }
-  }
 
   case class TimerSession(user_id: Long, session_start_epoch: Long, n_events: Long, total_cents: Long)
 
@@ -1205,29 +940,19 @@ object EventStreams {
     */
   def twsTimersFileSource(spark: SparkSession, dir: String): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-stream-twstimer")
-    val bump: Column => Column = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        c => c + lit(2L * 86400L * 1000000000L)
-      case _ => c => c + expr("INTERVAL 2 DAYS")
-    }
-    def sentinel(id: Long): DataFrame =
-      raw.agg(max(col("ts")).as("mts")).select(
-        lit(id).as("event_id"), bump(col("mts")).as("ts"),
-        lit(999999L).as("user_id"), lit("view").as("event_type"),
-        lit(0.0).as("value"), lit("").as("props"))
-    dumpOneFile(srcDir)(raw, "a_events.parquet", 300)
-    dumpOneFile(srcDir)(sentinel(-1L), "b_sentinel.parquet", 60)
-    dumpOneFile(srcDir)(sentinel(-2L), "c_sentinel.parquet", 0)
-    val drained = runStreamOnDir(spark, srcDir, "twstimer", OutputMode.Append(), raw.schema) { df =>
+    BoundedStream.run(spark, "twstimer") { s =>
+      s.write(raw, "a_events.parquet", 300)
+      s.write(sentinels(raw, Seq((-1L, 999999L, "view"))), "b_sentinel.parquet", 60)
+      s.write(sentinels(raw, Seq((-2L, 999999L, "view"))), "c_sentinel.parquet", 0)
       import spark.implicits._
-      df.withWatermark("ts", "10 minutes")
+      val out = s.files(raw.schema).withWatermark("ts", "10 minutes")
         .as[Event].groupByKey(_.user_id)
         .transformWithState(new TimerSessionProcessor,
           TimeMode.EventTime(), OutputMode.Append())
         .toDF()
+      s.drain(s.parquet(out))
+      s.parquetRows(out.schema).filter(col("user_id") < 999999L)
     }
-    drained.filter(col("user_id") < 999999L)
   }
 
   /** ORACLE-VERIFIED `transformWithState` run — the Spark 4 arbitrary-state
@@ -1239,12 +964,14 @@ object EventStreams {
     * the bounded-state shape that survives an unbounded stream.
     */
   def twsFileSource(spark: SparkSession, dir: String): DataFrame =
-    runBoundedFileSource(spark, dir, "tws", 1, OutputMode.Append()) { df =>
+    BoundedStream.run(spark, "tws") { s =>
       import spark.implicits._
-      df.as[Event].groupByKey(_.user_id)
+      val out = s.link(s"$dir/events.parquet", 1).as[Event].groupByKey(_.user_id)
         .transformWithState(new RunningCentsProcessor,
           TimeMode.None(), OutputMode.Append())
         .toDF()
+      s.drain(s.parquet(out))
+      s.parquetRows(out.schema)
     }
 
   /** Driver-gate registry: the one streaming entry whose FINAL state is
@@ -1263,7 +990,7 @@ object EventStreams {
     "streaming_session_filesrc" -> sessionFileSource _,
     "streaming_session_dynamic" -> sessionDynamicFileSource _,
     "streaming_enrich_filesrc" -> enrichFileSource _,
-    "streaming_sink_parquet" -> dedupToParquetSink _,
+    "streaming_sink_parquet" -> dedupFileSource _,
     "streaming_topk_filesrc" -> topkFileSource _,
     "streaming_cdc_filesrc" -> cdcMergeFileSource _,
     "streaming_tws_filesrc" -> twsFileSource _,

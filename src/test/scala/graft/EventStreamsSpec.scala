@@ -19,7 +19,7 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("streamingSession clones isolate streaming knobs from the shared session") {
-    val ss = EventStreams.streamingSession(spark)
+    val ss = graft.streaming.BoundedStream.streamingSession(spark)
     // fixture-scale state-store sizing: one RocksDB instance per shuffle
     // partition, so the clone must NOT inherit the 32-wide batch default
     assert(ss.conf.get("spark.sql.shuffle.partitions") == "8")
@@ -310,5 +310,41 @@ class EventStreamsSpec extends AnyFunSuite {
       "some finalized window must be missing its late straggler rows")
     assert(joined.filter(col("n_batch") < col("n_events")).isEmpty)
     out.unpersist()
+  }
+
+  /** A copy of the fixture events with event 0 relabelled as `kind`: the
+    * fixture's own event 0 is an `error`, so the registry run never puts
+    * id 0 on a join side.
+    */
+  private def withEvent0As(kind: String)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-test-event0-")
+    try {
+      spark.read.parquet(s"${TestSpark.sf}/events.parquet")
+        .withColumn("event_type",
+          when(col("event_id") === 0, lit(kind)).otherwise(col("event_type")))
+        .write.parquet(s"$dir/events.parquet")
+      body(dir.toString)
+    } finally graft.sources.v2.MemCatalog.deleteRecursively(dir)
+  }
+
+  private def assertSameRows(streamed: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame, idCol: String): Unit = {
+    assert(batch.filter(col(idCol) === 0).count() > 0, s"batch join has no $idCol 0")
+    assert(streamed.count() == batch.count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("outer-join gate keeps a purchase with event id 0 (batch LEFT JOIN)") {
+    withEvent0As("purchase") { dir =>
+      assertSameRows(EventStreams.outerJoinFileSource(spark, dir),
+        EventStreams.clickPurchaseOuterJoin(Tables.events(spark, dir)), "purchase_id")
+    }
+  }
+
+  test("full-outer gate keeps a click with event id 0 (batch FULL JOIN)") {
+    withEvent0As("click") { dir =>
+      assertSameRows(EventStreams.fullOuterJoinFileSource(spark, dir),
+        EventStreams.clickPurchaseFullOuterJoin(Tables.events(spark, dir)), "click_id")
+    }
   }
 }
